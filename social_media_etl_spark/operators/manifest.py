@@ -63,6 +63,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -334,9 +335,11 @@ def _stats_rows_for_files(
 
 
 class ConcurrentWriteError(RuntimeError):
-    """A non-commutable commit (upsert/overwrite) lost the CAS race:
-    its merge was computed against a snapshot that is no longer the
-    head. Re-run the operation against the new head."""
+    """A commit lost the CAS race and cannot rebase: a single-shot
+    commit (upsert/overwrite/metadata op) was computed against a
+    snapshot that is no longer the head, a rebasing one met a
+    conflicting winner or ran out of attempts. Re-run the operation
+    against the new head."""
 
 
 class VersionedTable:
@@ -713,6 +716,18 @@ class VersionedTable:
             allocated.append(col)
         return df, allocated
 
+    @staticmethod
+    def _refuse_stale_ids(op: str, head: dict, id_map: dict) -> None:
+        """A raced commit advanced the identity watermark this commit
+        allocated from: its staged ids could collide with the winner's,
+        so refuse the rebase — a re-run reallocates from the new head
+        (uniqueness over convenience, the Delta identity conflict)."""
+        if (head.get("identity") or {}) != id_map:
+            raise ConcurrentWriteError(
+                f"VersionedTable: {op} raced a commit that advanced the "
+                "identity watermark; the staged ids are stale — re-run"
+            )
+
     def _identity_watermark(
         self, files: list[str], id_map: dict, allocated: list[str]
     ) -> dict:
@@ -749,7 +764,7 @@ class VersionedTable:
         """Watermarks from footer statistics, or None when any
         non-empty row group lacks the stat (caller falls back to the
         Spark aggregate). Works on every scheme (pyarrow.fs, the
-        :meth:`_dir_num_rows` pattern)."""
+        :meth:`_dir_has_rows` pattern)."""
         import pyarrow.parquet as pq
 
         def _one(pf) -> bool:
@@ -949,6 +964,216 @@ class VersionedTable:
         if not ok:
             self._fs.delete(tmp, False)
         return ok
+
+    # -- commit protocol ----------------------------------------------------
+
+    #: manifest keys that record ONE commit, never table state. Every
+    #: other key (schema, column mapping, index/partition/bucket
+    #: configs, constraints, properties, identity, features, txns, the
+    #: file list, deletion vectors) is table state: a child commit
+    #: inherits it from its parent pointer unless the op replaces it.
+    _COMMIT_KEYS = frozenset(
+        {
+            "version",
+            "parent",
+            "op",
+            "txn",
+            "predicate",
+            "merge_on",
+            "mode",
+            "cdc",
+            "restored_from",
+            "copied_files",
+            "cloned_from",
+        }
+    )
+
+    #: CAS attempts of :meth:`_commit` before it gives up
+    _CAS_ATTEMPTS = 10
+
+    def _child(
+        self, ptr: dict, parent: int | None, op: str, txn: str | None = None,
+        **fields,
+    ) -> dict:
+        """The manifest commit ``op`` stages on top of pointer ``ptr``
+        — the ONE table-state carry rule: every key of ``ptr`` except
+        :attr:`_COMMIT_KEYS`, then the commit header (``parent`` None is
+        a table's v0), then the op's own ``fields``. A per-commit field
+        passed as None is left out (a commit that recorded no CDC has
+        no ``cdc`` key)."""
+        m = {k: v for k, v in ptr.items() if k not in self._COMMIT_KEYS}
+        m.update(
+            version=0 if parent is None else parent + 1,
+            parent=parent,
+            op=op,
+            txn=txn,
+            txns=self._txns_after(ptr, txn),
+        )
+        m.update(
+            (k, v)
+            for k, v in fields.items()
+            if v is not None or k not in self._COMMIT_KEYS
+        )
+        return m
+
+    def _commit_once(self, m: dict) -> int:
+        """CAS a single-shot commit into slot ``m["version"]``. These
+        ops (metadata changes, full rewrites, restore, clone, create)
+        were computed against ONE snapshot, so the first committer wins
+        and a lost race raises for a re-run against the new head."""
+        if not self._try_commit(m, m["version"]):
+            stale = (
+                "an empty table"
+                if m["parent"] is None
+                else f"stale v{m['parent']}"
+            )
+            raise ConcurrentWriteError(
+                f"VersionedTable: {m['op']} raced past {stale}; head is "
+                f"now v{self.head_version()} — re-run"
+            )
+        return m["version"]
+
+    def _n_files(self, ptr: dict) -> int:
+        """Live file count of a pointer without opening a segment."""
+        if "segments" not in ptr:
+            return len(ptr.get("files") or [])
+        n = ptr.get("n_files")
+        return len(self._resolve(ptr)["files"]) if n is None else n
+
+    def _set_files(
+        self, m: dict, ptr: dict, removed, added: list[str], meta=None
+    ):
+        """Give child ``m`` the file list of ``ptr`` minus ``removed``
+        (None: every file — a full rewrite) plus ``added``. Untouched
+        segments carry BY NAME and only segments that lost files are
+        re-written, so the metadata IO is O(changed files); legacy
+        inline tables filter their stats/parts instead. Deletion
+        vectors only ever hide rows of kept files, so they drop once no
+        file is kept.
+
+        ``meta`` is the new files' metadata, returned for reuse by the
+        next attempt; None builds it under ``m``'s index and partition
+        config — segment names on a segmented table (written now,
+        before the CAS: a lost race leaves orphans that vacuum's
+        age-guarded sweep collects), else the inline (stats, parts)."""
+        if meta is None:
+            cols, bloom = m.get("stats_cols") or [], m.get("bloom")
+            pb = m.get("partition_by")
+            meta = (
+                self._build_segments(added, cols, pb, bloom)
+                if "segments" in ptr
+                else (
+                    self._collect_stats(added, cols, bloom)
+                    if added and (cols or bloom)
+                    else {},
+                    self._partition_values(added, pb) if added and pb else {},
+                )
+            )
+        if "segments" in ptr:
+            segs, n_kept = [], 0
+            if removed is not None:
+                segs = (
+                    self._segments_without(ptr, removed)
+                    if removed
+                    else list(ptr["segments"])
+                )
+                n_kept = self._n_files(ptr) - len(removed)
+            m["segments"] = segs + meta
+            m["n_files"] = n_kept + len(added)
+        else:
+            kept = (
+                []
+                if removed is None
+                else [f for f in ptr["files"] if f not in removed]
+            )
+            keep = set(kept)
+            stats, parts = meta
+            m["files"] = sorted(kept + added)
+            m["stats"] = {
+                **{
+                    f: s
+                    for f, s in (ptr.get("stats") or {}).items()
+                    if f in keep
+                },
+                **stats,
+            }
+            m["parts"] = {
+                **{
+                    f: p
+                    for f, p in (ptr.get("parts") or {}).items()
+                    if f in keep
+                },
+                **parts,
+            }
+            n_kept = len(kept)
+        if not n_kept:
+            m.pop("delete_vectors", None)
+        return meta
+
+    def _commit(
+        self,
+        op: str,
+        state: tuple,
+        removed,
+        added: list[str],
+        rebase,
+        fields,
+        txn: str | None = None,
+        dv_dir: str | None = None,
+        check: bool = True,
+    ) -> int:
+        """The ONE commit loop of every op that rebases instead of
+        failing on a lost race: append, delete, update, replace_where,
+        merge (COW and MoR) and optimize. The op has planned and
+        WRITTEN its files against ``state`` = ``(parent, pointer,
+        resolved manifest)``. Each attempt stages the child of the
+        current head through the carry rule (:meth:`_child`, the op's
+        own keys being ``fields(head_pointer)``), points it at the
+        head's files minus ``removed`` plus ``added``
+        (:meth:`_set_files`; the new files' metadata is built once),
+        appends the new deletion vector ``dv_dir``, validates CHECK
+        constraints over the new files once (``check``) and CASes via
+        :meth:`_try_commit`. A lost CAS hands the state to
+        ``rebase(parent, ptr, base)`` — the op's conflict policy —
+        which returns the new head's triple or raises
+        :class:`ConcurrentWriteError`.
+
+        The conflict policies are Delta's rules at FILE granularity
+        (r11). An append commutes with every winner; it re-checks only
+        its schema, partition/bucket spec and identity watermark. A
+        predicate DML (COW or MoR), a MERGE and an OPTIMIZE commute
+        with appends AND with DISJOINT rewrites
+        (:meth:`_rebase_over_disjoint`): no winner may have removed,
+        rewritten or vectored a file this commit rewrote or vectored,
+        and the rows the winners ADDED must miss this commit's
+        predicate (merge: its source keys; optimize: nothing to miss,
+        its rewrite is content-identical). Table-wide or metadata
+        winners (overwrite, upsert, rename, drop, spec change) always
+        raise. Table state a winner changed (an analyze's index config,
+        a vector on another file) reaches the rebased child through
+        the carry rule."""
+        parent, ptr, base = state
+        removed = set(removed)
+        meta = None
+        for _ in range(self._CAS_ATTEMPTS):
+            m = self._child(ptr, parent, op, txn, **fields(ptr))
+            meta = self._set_files(m, ptr, removed, added, meta)
+            if dv_dir:
+                m["delete_vectors"] = (m.get("delete_vectors") or []) + [
+                    dv_dir
+                ]
+                # readers must anti-join the vector or resurrect rows
+                self._add_feature(m, "dv")
+            if check:
+                # new files carry no deletion vectors: skip the anti-join
+                self._check_constraints(added, {**m, "delete_vectors": []})
+                check = False
+            if self._try_commit(m, parent + 1):
+                return parent + 1
+            parent, ptr, base = rebase(parent, ptr, base)
+        raise ConcurrentWriteError(
+            f"VersionedTable: {op} lost {self._CAS_ATTEMPTS} CAS races"
+        )
 
     # -- data IO ------------------------------------------------------------
 
@@ -1682,17 +1907,12 @@ class VersionedTable:
             if df.isEmpty():
                 return []
             raise IOError(f"VersionedTable: no part files written at {ddir}")
-        if drop_if_empty and self._dir_num_rows(ddir) == 0:
+        if drop_if_empty and not self._dir_has_rows(ddir):
             # every part file is schema-only (an empty rewrite under
             # SPARK-23271-style empty-frame writes): remove the dir so
             # the commit records an empty file list, as the old
             # pre-write probe produced
-            if self._local:
-                import shutil
-
-                shutil.rmtree(ddir, ignore_errors=True)
-            else:
-                self._fs.delete(self._P(ddir), True)
+            self._rm_dir(ddir)
             return []
         return sorted(files)
 
@@ -1718,50 +1938,70 @@ class VersionedTable:
         (the feed's change-free contract is by ABSENCE of a cdc dir,
         so the empty dir is deleted, never recorded)."""
         cdir = self._write_cdc(df, version_hint)
-        if self._dir_num_rows(cdir) > 0:
+        if self._dir_has_rows(cdir):
             return cdir
-        if self._local:
-            import shutil
-
-            shutil.rmtree(cdir, ignore_errors=True)
-        else:
-            self._fs.delete(self._P(cdir), True)
+        self._rm_dir(cdir)
         return None
 
-    def _dir_num_rows(self, d: str) -> int:
-        """Total rows across a just-written parquet dir — footer
+    def _dir_has_rows(self, d: str) -> bool:
+        """Whether a just-written parquet dir holds any row — footer
         metadata ONLY, on every scheme (r16: the remote branch reads
         footers through pyarrow.fs like :meth:`_copy_files_distributed`
         does, instead of running a ``limit(1).count()`` Spark job per
-        commit). A missing/empty directory is 0 rows (an all-empty
+        commit), and it stops at the FIRST non-empty footer, so a
+        non-empty dir costs one footer read however many part files it
+        holds. A missing/empty directory has no rows (an all-empty
         write legitimately produces no part files); any OTHER failure
-        propagates — the callers DELETE the directory on 0, so
-        swallowing a transient read error here would silently discard
-        a non-empty CDC feed or deletion vector (ADVICE r15)."""
+        propagates — the callers DELETE the directory when it is
+        empty, so swallowing a transient read error here would
+        silently discard a non-empty CDC feed or deletion vector
+        (ADVICE r15)."""
         import pyarrow.parquet as pq
 
         if self._local:
-            total = 0
             for root, _dirs, names in os.walk(d):
                 for n in names:
-                    if n.endswith(".parquet") or n.startswith("part-"):
-                        total += pq.ParquetFile(
-                            os.path.join(root, n)
-                        ).metadata.num_rows
-            return total
+                    if (n.endswith(".parquet") or n.startswith("part-")) and (
+                        pq.ParquetFile(os.path.join(root, n)).metadata.num_rows
+                    ):
+                        return True
+            return False
         from pyarrow import fs as pafs
 
         fsys, root = pafs.FileSystem.from_uri(d)
         sel = pafs.FileSelector(root, recursive=True, allow_not_found=True)
-        total = 0
         for info in fsys.get_file_info(sel):
             name = info.base_name
             if info.type == pafs.FileType.File and (
                 name.endswith(".parquet") or name.startswith("part-")
             ):
                 with fsys.open_input_file(info.path) as f:
-                    total += pq.ParquetFile(f).metadata.num_rows
-        return total
+                    if pq.ParquetFile(f).metadata.num_rows:
+                        return True
+        return False
+
+    def _rm_dir(self, d: str) -> None:
+        """Remove a staged directory this commit decided not to record."""
+        if self._local:
+            import shutil
+
+            shutil.rmtree(d, ignore_errors=True)
+        else:
+            self._fs.delete(self._P(d), True)
+
+    def _dv_files(self, *dv_dirs: str) -> set[str]:
+        """The data files the given deletion-vector dirs name (their
+        distinct ``(file, position)`` file keys as plain paths) — one
+        bounded collect, O(vectored files)."""
+        from urllib.parse import unquote, urlparse
+
+        return {
+            unquote(urlparse(r[0]).path)
+            for r in self.spark.read.parquet(*dv_dirs)
+            .select(self._DV_FILE)
+            .distinct()
+            .collect()
+        }
 
     @classmethod
     def _partition_values(cls, files: list[str], partition_by=None) -> dict:
@@ -1984,11 +2224,11 @@ class VersionedTable:
             "constraints": constraints or {},
             # GENERATED ALWAYS AS expressions (r13): computed when an
             # ingest omits the column, validated in-plan when it
-            # supplies one; carried by every commit (_carry_mapping)
+            # supplies one; carried by every commit (_child)
             "generated": generated or {},
             # GENERATED ALWAYS AS IDENTITY specs + per-column high
             # watermark (r15): advanced by every allocating commit,
-            # carried by the rest (_carry_mapping)
+            # carried by the rest (_child)
             "identity": cls._bump_identity(
                 id_map,
                 t._identity_watermark(files, id_map, id_alloc),
@@ -2016,28 +2256,11 @@ class VersionedTable:
                 + (["identity"] if id_map else [])
             ),
         }
-        if segmented:
-            m["segments"] = t._build_segments(
-                files, stats_cols, partition_by, bloom
-            )
-            m["n_files"] = len(files)
-        else:
-            stats = (
-                t._collect_stats(files, stats_cols, bloom)
-                if stats_cols or bloom
-                else {}
-            )
-            parts = (
-                t._partition_values(files, partition_by)
-                if partition_by
-                else {}
-            )
-            m.update({"files": files, "stats": stats, "parts": parts})
+        # no parent pointer: an empty one selects the metadata layout
+        layout = {"segments": []} if segmented else {}
+        t._set_files(m, layout, None, files)
         t._check_constraints(files, m)
-        if not t._try_commit(m, 0):
-            raise ConcurrentWriteError(
-                f"VersionedTable: concurrent create at {path}"
-            )
+        t._commit_once(m)
         return t
 
     def committed_txns(self) -> set[str]:
@@ -2060,29 +2283,6 @@ class VersionedTable:
         return out
 
     @staticmethod
-    def _carry_mapping(m: dict, base: dict) -> dict:
-        """Carry the column-mapping metadata (``field_ids``,
-        ``aliases``) from a parent manifest into a fresh child — every
-        commit op calls this so a RENAME's indirection survives any
-        later DML. Full rewrites keep ``aliases`` too: once no live
-        footer carries an old physical name the alias entries are
-        inert (the read path only coalesces names actually present)."""
-        for k in (
-            "field_ids",
-            "aliases",
-            "bucket_by",
-            "cdf",
-            "dropped_phys",
-            "features",
-            "properties",
-            "generated",
-            "identity",
-        ):
-            if base.get(k):
-                m[k] = base[k]
-        return m
-
-    @staticmethod
     def _txns_after(base: dict, txn: str | None) -> list[str]:
         prior = base.get("txns") or ([base["txn"]] if base.get("txn") else [])
         return sorted(set(prior) | {txn}) if txn else sorted(set(prior))
@@ -2096,10 +2296,10 @@ class VersionedTable:
             return T.StructType.fromJson(json.loads(manifest["schema_json"]))
         return None
 
-    def _check_schema(self, df: DataFrame, parent: int) -> dict:
-        """Validate an append's schema against the parent manifest and
-        return the child manifest's schema fields: ``{"schema",
-        "schema_json", "mixed"}``.
+    def _check_schema(self, df: DataFrame, base: dict) -> dict:
+        """Validate an append's schema against the parent pointer
+        ``base`` and return the child manifest's schema fields:
+        ``{"schema", "schema_json", "mixed"}``.
 
         Evolution contract (VERDICT r6, the Delta/Iceberg add-column
         rule): an append may ADD new columns — they become nullable
@@ -2108,7 +2308,6 @@ class VersionedTable:
         drift: that would corrupt snapshot reads. ``mixed`` marks a
         manifest whose file set spans more than one physical schema,
         switching reads to footer-merged mode."""
-        base = self._read_pointer(parent)
         table = self._manifest_schema(base)
         if table is None:
             want = base["schema"]
@@ -2213,21 +2412,15 @@ class VersionedTable:
         for v in self.versions():
             m = self._read_pointer(v)
             mt = self._commit_ts_ms(v)
-            if "segments" in m:
-                # the pointer records its file count — history never
-                # needs to open a segment
-                n_files = m.get("n_files")
-                if n_files is None:  # pragma: no cover - belt and braces
-                    n_files = len(self._resolve(m)["files"])
-            else:
-                n_files = len(m.get("files") or [])
             rows.append(
                 (
                     v,
                     m.get("parent"),
                     m.get("op"),
                     m.get("txn"),
-                    n_files,
+                    # the pointer records its file count — history
+                    # never needs to open a segment
+                    self._n_files(m),
                     int(mt),
                 )
             )
@@ -2417,7 +2610,6 @@ class VersionedTable:
     def append(
         self,
         df: DataFrame,
-        max_retries: int = 10,
         txn: str | None = None,
         _commit_extra: dict | None = None,
     ) -> int:
@@ -2437,123 +2629,59 @@ class VersionedTable:
         10-file one. Legacy inline tables keep the old O(all files)
         manifest write."""
         parent = self.head_version()
-        _ptr0 = self._read_pointer(parent)
-        id_map = _ptr0.get("identity") or {}
+        ptr = self._read_pointer(parent)
+        id_map = ptr.get("identity") or {}
         df, id_alloc = self._alloc_identity(df, id_map)
         if id_alloc:
             # allocation appends the column; restore the table's
             # declared column order for the written files
-            tbl = self._manifest_schema(_ptr0)
+            tbl = self._manifest_schema(ptr)
             if tbl is not None:
                 order = [f.name for f in tbl.fields if f.name in df.columns]
                 order += [c for c in df.columns if c not in order]
                 df = df.select(*order)
-        df = self._apply_generated(df, _ptr0.get("generated"))
-        sch = self._check_schema(df, parent)
-        partition_by = _ptr0.get("partition_by")
-        bucket_by = _ptr0.get("bucket_by")
-        files = self._write_data(df, parent + 1, partition_by, bucket_by)
-        id_marks = (
-            self._identity_watermark(files, id_map, id_alloc)
-            if id_alloc
-            else {}
-        )
-        new_parts = None
-        new_stats = None
-        new_segs = None
-        new_checked = False
-        for _ in range(max_retries):
-            base = self._read_pointer(parent)
-            if id_alloc and (base.get("identity") or {}) != id_map:
-                # a raced commit advanced the identity watermark: the
-                # staged files carry ids allocated from the STALE
-                # watermark and could collide with the winner's —
-                # refuse the rebase; a re-run reallocates from the
-                # new head (uniqueness over convenience, the Delta
-                # identity-conflict behavior)
-                raise ConcurrentWriteError(
-                    "VersionedTable: append raced a commit that "
-                    "advanced the identity watermark; the staged ids "
-                    "are stale — re-run"
-                )
+        df = self._apply_generated(df, ptr.get("generated"))
+        self._check_schema(df, ptr)  # refuse a drifted frame before writing
+        layout = (ptr.get("partition_by"), ptr.get("bucket_by"))
+        files = self._write_data(df, parent + 1, *layout)
+        # op-specific metadata riders (copy_into's loaded-file record)
+        # re-apply verbatim on every attempt
+        extra = dict(_commit_extra or {})
+        if id_alloc:
+            extra["identity"] = self._bump_identity(
+                id_map, self._identity_watermark(files, id_map, id_alloc)
+            )
+
+        def rebase(_parent, _ptr, _base):
+            head = self.head_version()
+            ptr = self._read_pointer(head)
+            if id_alloc:
+                self._refuse_stale_ids("append", ptr, id_map)
             # a raced writer may have changed the PARTITION SPEC (an
             # overwrite(replace_schema=True) can drop the partition
             # column); our files are already laid out under the stale
             # spec, so rebasing would commit a manifest whose
             # partition_by disagrees with its file layout (ADVICE r8)
-            if (
-                base.get("partition_by") != partition_by
-                or base.get("bucket_by") != bucket_by
-            ):
+            now = (ptr.get("partition_by"), ptr.get("bucket_by"))
+            if now != layout:
                 raise ConcurrentWriteError(
                     "VersionedTable: append raced a commit that changed "
-                    f"the partition/bucket spec ({partition_by!r}/"
-                    f"{bucket_by!r} → {base.get('partition_by')!r}/"
-                    f"{base.get('bucket_by')!r}); the staged files "
-                    "follow the old layout — re-run"
+                    f"the partition/bucket spec ({layout[0]!r}/"
+                    f"{layout[1]!r} → {now[0]!r}/{now[1]!r}); the staged "
+                    "files follow the old layout — re-run"
                 )
-            v = parent + 1
-            stats_cols = base.get("stats_cols") or []
-            m = {
-                "version": v,
-                "parent": parent,
-                "op": "append",
-                "schema": sch["schema"],
-                "schema_json": sch["schema_json"],
-                "mixed": sch["mixed"],
-                "txn": txn,
-                "txns": self._txns_after(base, txn),
-                "stats_cols": stats_cols,
-                "bloom": base.get("bloom"),
-                "partition_by": partition_by,
-                "constraints": base.get("constraints") or {},
-            }
-            m = self._carry_mapping(m, base)
-            if id_marks:
-                m["identity"] = self._bump_identity(id_map, id_marks)
-            if base.get("delete_vectors"):
-                # new files carry no deleted rows; existing vectors
-                # still apply to the files they were cut for
-                m["delete_vectors"] = base["delete_vectors"]
-            if "segments" in base:
-                if new_segs is None:
-                    new_segs = self._build_segments(
-                        files, stats_cols, partition_by, base.get("bloom")
-                    )
-                m["segments"] = base["segments"] + new_segs
-                m["n_files"] = base.get("n_files", 0) + len(files)
-            else:
-                if (stats_cols or base.get("bloom")) and new_stats is None:
-                    new_stats = self._collect_stats(
-                        files, stats_cols, base.get("bloom")
-                    )
-                if new_parts is None:
-                    new_parts = (
-                        self._partition_values(files, partition_by)
-                        if partition_by
-                        else {}
-                    )
-                m["files"] = sorted(base["files"] + files)
-                m["stats"] = {
-                    **(base.get("stats") or {}),
-                    **(new_stats or {}),
-                }
-                m["parts"] = {**(base.get("parts") or {}), **new_parts}
-            if _commit_extra:
-                # op-specific metadata riders (copy_into's loaded-file
-                # record) — never core manifest keys, so the rebase
-                # loop can re-apply them verbatim each attempt
-                m.update(_commit_extra)
-            if new_checked is False:
-                # new files carry no deletion vectors — skip the anti-join
-                self._check_constraints(files, {**m, "delete_vectors": []})
-                new_checked = True
-            if self._try_commit(m, v):
-                return v
-            parent = self.head_version()
-            sch = self._check_schema(df, parent)
-        raise ConcurrentWriteError(
-            f"VersionedTable: append lost {max_retries} CAS races"
+            return head, ptr, None
+
+        # the winner may itself have evolved the schema: re-validate
+        # against every head the commit is staged on
+        return self._commit(
+            "append",
+            (parent, ptr, None),
+            (),
+            files,
+            rebase,
+            lambda head: {**self._check_schema(df, head), **extra},
+            txn,
         )
 
     def copy_into(
@@ -2640,7 +2768,8 @@ class VersionedTable:
         from pyspark.sql import functions as F
 
         parent = self.head_version()
-        if self._read_pointer(parent).get("identity"):
+        base = self._read_pointer(parent)
+        if base.get("identity"):
             raise ValueError(
                 "VersionedTable.upsert: table has GENERATED ALWAYS "
                 "AS IDENTITY column(s) — upsert cannot allocate ids; "
@@ -2648,9 +2777,7 @@ class VersionedTable:
                 "without IDENTITY"
             )
         current = self.read(parent)
-        df = self._apply_generated(
-            df, self._read_pointer(parent).get("generated")
-        )
+        df = self._apply_generated(df, base.get("generated"))
         merged = current.unionByName(df.select(*current.columns))
         w = Window.partitionBy(*key_cols).orderBy(
             *[F.desc(c) for c in order_cols]
@@ -2660,10 +2787,8 @@ class VersionedTable:
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        base = self._read_pointer(parent)
-        partition_by = base.get("partition_by")
         files = self._write_data(
-            latest, parent + 1, partition_by, base.get("bucket_by")
+            latest, parent + 1, base.get("partition_by"), base.get("bucket_by")
         )
         v = parent + 1
         cdc_dir = None
@@ -2752,52 +2877,13 @@ class VersionedTable:
             # whose every row lost (or tied) changes nothing; the
             # guard reads the written footers (one plan execution)
             cdc_dir = self._write_cdc_if_any(cdc, v)
-        stats_cols = base.get("stats_cols") or []
-        m = {
-            "version": v,
-            "parent": parent,
-            "op": "upsert",
-            "schema": base["schema"],
-            "schema_json": base.get("schema_json", latest.schema.json()),
-            # a full rewrite lands every logical column in every file,
-            # collapsing any earlier mixed layout back to uniform
-            "mixed": False,
-            "txns": self._txns_after(base, None),
-            "stats_cols": stats_cols,
-            "bloom": base.get("bloom"),
-            "partition_by": partition_by,
-            "constraints": base.get("constraints") or {},
-        }
-        m = self._carry_mapping(m, base)
-        if cdc_dir:
-            m["cdc"] = cdc_dir
-        stats = parts = None
-        if "segments" not in base:
-            stats = (
-                self._collect_stats(files, stats_cols, base.get("bloom"))
-                if stats_cols or base.get("bloom")
-                else {}
-            )
-            parts = (
-                self._partition_values(files, partition_by)
-                if partition_by
-                else {}
-            )
-        if "segments" in base:
-            # full rewrite → fresh consolidated segments (chunked)
-            m["segments"] = self._build_segments(
-                files, stats_cols, partition_by, base.get("bloom")
-            )
-            m["n_files"] = len(files)
-        else:
-            m.update({"files": files, "stats": stats, "parts": parts})
+        # a full rewrite lands every logical column in every file,
+        # collapsing any earlier mixed layout back to uniform
+        m = self._child(base, parent, "upsert", mixed=False, cdc=cdc_dir)
+        # full rewrite → fresh consolidated segments (chunked)
+        self._set_files(m, base, None, files)
         self._check_constraints(files, m)
-        if not self._try_commit(m, v):
-            raise ConcurrentWriteError(
-                f"VersionedTable: upsert merged against stale v{parent}; "
-                f"head is now v{self.head_version()} — re-run"
-            )
-        return v
+        return self._commit_once(m)
 
     def read_changes(
         self, from_version: int, to_version: int | None = None
@@ -3123,6 +3209,7 @@ class VersionedTable:
             )
         if properties is not None:
             self._validate_properties(properties)
+        base = self._read_pointer(parent)
         id_map: dict[str, dict] = {}
         id_alloc: list[str] = []
         if replace_schema:
@@ -3143,12 +3230,12 @@ class VersionedTable:
                     df, id_map, allow_present=True
                 )
         else:
-            id_map = self._read_pointer(parent).get("identity") or {}
+            id_map = base.get("identity") or {}
             # a truncate-and-load CONTINUES the sequence from the
             # watermark — ids are never reused (Delta's contract)
             df, id_alloc = self._alloc_identity(df, id_map)
             if id_alloc:
-                tbl = self._manifest_schema(self._read_pointer(parent))
+                tbl = self._manifest_schema(base)
                 if tbl is not None:
                     order = [
                         f.name for f in tbl.fields if f.name in df.columns
@@ -3159,9 +3246,7 @@ class VersionedTable:
             # replace_schema redefines the table, dropping the
             # generation contract with the rest of the old schema;
             # a plain overwrite keeps enforcing it on the new rows
-            df = self._apply_generated(
-                df, self._read_pointer(parent).get("generated")
-            )
+            df = self._apply_generated(df, base.get("generated"))
         elif generated:
             for g, gexpr in generated.items():
                 circular = set(generated) & self._expr_identifiers(gexpr)
@@ -3173,17 +3258,13 @@ class VersionedTable:
                         "expressions may only use regular columns"
                     )
             df = self._apply_generated(df, generated)
-        if replace_schema:
-            sch = {
-                "schema": df.schema.simpleString(),
-                "schema_json": df.schema.json(),
-                "mixed": False,
-            }
-        else:
-            sch = self._check_schema(df, parent)
-            # a full rewrite lands every logical column in every file
-            sch["mixed"] = False
-        base = self._read_pointer(parent)
+        # a full rewrite lands every logical column in every file
+        sch = (
+            {"schema": df.schema.simpleString(), "schema_json": df.schema.json()}
+            if replace_schema
+            else self._check_schema(df, base)
+        )
+        sch["mixed"] = False
         new_pb = partition_by
         partition_by = base.get("partition_by")
         if replace_schema and new_pb is not _UNSET:
@@ -3235,7 +3316,6 @@ class VersionedTable:
         files = self._write_data(
             df, parent + 1, partition_by, base.get("bucket_by")
         )
-        v = parent + 1
         cdc_dir = None
         if base.get("cdf"):
             # change-data-feed table (r11, completing the DML set
@@ -3256,41 +3336,33 @@ class VersionedTable:
                     allowMissingColumns=True,
                 )
             )
-            cdc_dir = self._write_cdc_if_any(cdc, v)
-        stats_cols = base.get("stats_cols") or []
-        bloom_cfg = base.get("bloom")
+            cdc_dir = self._write_cdc_if_any(cdc, parent + 1)
+        m = self._child(
+            base,
+            parent,
+            "overwrite",
+            txn,
+            **sch,
+            partition_by=partition_by,
+            cdc=cdc_dir,
+        )
         if replace_schema:
             # the new schema may have dropped indexed columns — keep
             # only the live ones (stats over absent columns would
             # record dead all-NULL census entries forever)
-            stats_cols = [c for c in stats_cols if c in df.columns]
+            m["stats_cols"] = [
+                c for c in base.get("stats_cols") or [] if c in df.columns
+            ]
+            bloom_cfg = base.get("bloom")
             if bloom_cfg:
                 live_bloom = [
                     c for c in bloom_cfg["cols"] if c in df.columns
                 ]
-                bloom_cfg = (
+                m["bloom"] = (
                     {**bloom_cfg, "cols": live_bloom} if live_bloom else None
                 )
-        m = {
-            "version": v,
-            "parent": parent,
-            "op": "overwrite",
-            "schema": sch["schema"],
-            "schema_json": sch["schema_json"],
-            "mixed": sch["mixed"],
-            "txn": txn,
-            "txns": self._txns_after(base, txn),
-            "stats_cols": stats_cols,
-            "bloom": bloom_cfg,
-            "partition_by": partition_by,
-            "constraints": (
-                dict(constraints)
-                if replace_schema and constraints is not None
-                else base.get("constraints") or {}
-            ),
-        }
-        m = self._carry_mapping(m, base)
-        if replace_schema:
+            if constraints is not None:
+                m["constraints"] = dict(constraints)
             # the schema swap redefines the table — generation
             # expressions over the OLD columns no longer apply; a
             # supplied map declares the NEW contract (create's
@@ -3303,53 +3375,22 @@ class VersionedTable:
                 self._add_feature(m, "constraints")
             m.pop("identity", None)
             if id_map:
-                m["identity"] = self._bump_identity(
-                    id_map,
-                    self._identity_watermark(files, id_map, id_alloc),
-                )
                 self._add_feature(m, "identity")
             if properties is not None:
                 # the REPLACE lands as ONE commit: the declared
                 # property map rides the same CAS as the data swap,
                 # so no reader ever sees the new definition under the
                 # old table's properties (ADVICE r14 #1)
+                m.pop("properties", None)
                 if properties:
                     m["properties"] = dict(properties)
-                else:
-                    m.pop("properties", None)
-        elif id_alloc:
+        if id_map:
             m["identity"] = self._bump_identity(
-                id_map,
-                self._identity_watermark(files, id_map, id_alloc),
+                id_map, self._identity_watermark(files, id_map, id_alloc)
             )
-        if cdc_dir:
-            m["cdc"] = cdc_dir
-        stats = parts = None
-        if "segments" not in base:
-            stats = (
-                self._collect_stats(files, stats_cols, bloom_cfg)
-                if stats_cols or bloom_cfg
-                else {}
-            )
-            parts = (
-                self._partition_values(files, partition_by)
-                if partition_by
-                else {}
-            )
-        if "segments" in base:
-            m["segments"] = self._build_segments(
-                files, stats_cols, partition_by, bloom_cfg
-            )
-            m["n_files"] = len(files)
-        else:
-            m.update({"files": files, "stats": stats, "parts": parts})
+        self._set_files(m, base, None, files)
         self._check_constraints(files, m)
-        if not self._try_commit(m, v):
-            raise ConcurrentWriteError(
-                f"VersionedTable: overwrite raced past stale v{parent}; "
-                f"head is now v{self.head_version()} — re-run"
-            )
-        return v
+        return self._commit_once(m)
 
     def restore(self, version: int, txn: str | None = None) -> int:
         """RESTORE TABLE TO VERSION AS OF (the Delta RESTORE command):
@@ -3391,8 +3432,6 @@ class VersionedTable:
         v = parent + 1
         cdc_dir = None
         if head_ptr.get("cdf"):
-            from urllib.parse import unquote, urlparse
-
             head_m = self._resolve(head_ptr)
             target_m = self._resolve(target_ptr)
             head_files = set(head_m["files"])
@@ -3425,13 +3464,10 @@ class VersionedTable:
             ]
             kept = [f for f in target_m["files"] if f in head_files]
             if new_dvs and kept:
-                dv = self.spark.read.parquet(*new_dvs)
-                dv_files = {
-                    unquote(urlparse(r[0]).path)
-                    for r in dv.select(self._DV_FILE).distinct().collect()
-                }
+                dv_files = self._dv_files(*new_dvs)
                 hit = [f for f in kept if f in dv_files]
                 if hit:
+                    dv = self.spark.read.parquet(*new_dvs)
                     rows = self._read_files(
                         target_m, hit, apply_dvs=False, with_pos=True
                     )
@@ -3450,35 +3486,22 @@ class VersionedTable:
                     # the feed projects to the reader's end schema
                     cdc = cdc.unionByName(fdf, allowMissingColumns=True)
                 cdc_dir = self._write_cdc_if_any(cdc, v)
-        m = dict(target_ptr)
-        # op-specific keys of the TARGET commit would misdescribe this
-        # one (and an inherited cdc dir would double-count its changes)
-        for stale in ("merge_on", "mode", "predicate", "txn", "cdc"):
-            m.pop(stale, None)
-        m.update(
-            {
-                "version": v,
-                "parent": parent,
-                "op": "restore",
-                "restored_from": version,
-                "txn": txn,
-                # idempotency keys are live table state, not snapshot
-                # content: carry the HEAD's set forward
-                "txns": self._txns_after(head_ptr, txn),
-            }
+        # the TARGET's table state is the restored snapshot; the txn
+        # set is live table state, not snapshot content, so it carries
+        # from the HEAD
+        m = self._child(
+            target_ptr,
+            parent,
+            "restore",
+            txn,
+            restored_from=version,
+            txns=self._txns_after(head_ptr, txn),
+            cdc=cdc_dir,
         )
+        m.pop("cdf", None)
         if head_ptr.get("cdf"):
             m["cdf"] = head_ptr["cdf"]
-        else:
-            m.pop("cdf", None)
-        if cdc_dir:
-            m["cdc"] = cdc_dir
-        if not self._try_commit(m, v):
-            raise ConcurrentWriteError(
-                f"VersionedTable: restore raced past stale v{parent}; "
-                f"head is now v{self.head_version()} — re-run"
-            )
-        return v
+        return self._commit_once(m)
 
     def clone(
         self,
@@ -3548,24 +3571,13 @@ class VersionedTable:
                 "own source is a no-op loop — pick a different "
                 "destination"
             )
-        v_new = dest.head_version() + 1 if replacing else 0
-        m = dict(ptr)
-        # op-specific keys of the source commit would misdescribe the
-        # clone's create (and an inherited cdc dir would replay the
-        # source commit's changes as the clone's)
-        for stale in (
-            "merge_on", "mode", "predicate", "txn", "cdc", "restored_from",
-        ):
-            m.pop(stale, None)
-        m.update(
-            {
-                "version": v_new,
-                "parent": dest.head_version() if replacing else None,
-                "op": "replace_clone" if replacing else "create",
-                "cloned_from": {"path": self.path, "version": src_v},
-                "txn": None,
-                "txns": [],
-            }
+        # the source snapshot's table state under a fresh txn history
+        m = self._child(
+            ptr,
+            dest.head_version() if replacing else None,
+            "replace_clone" if replacing else "create",
+            cloned_from={"path": self.path, "version": src_v},
+            txns=[],
         )
         if "segments" in ptr:
             m["segments"] = [
@@ -3581,11 +3593,7 @@ class VersionedTable:
                 "demote the destination's metadata format — OPTIMIZE "
                 "the source first"
             )
-        if not dest._try_commit(m, v_new):
-            raise ConcurrentWriteError(
-                f"VersionedTable: clone raced another commit at "
-                f"{dest_path}"
-            )
+        dest._commit_once(m)
         # back-registry at the SOURCE (r12): lets vacuum keep the
         # shared snapshot alive. Best-effort by design — the clone is
         # already committed and valid; a source this writer cannot
@@ -3742,24 +3750,12 @@ class VersionedTable:
                 apply_light_committer(
                     dv.write.mode("error"), self.spark
                 ).parquet(dvd_new)
-        m = dict(ptr)
-        for stale in (
-            "merge_on", "mode", "predicate", "txn", "cdc", "restored_from",
-        ):
-            m.pop(stale, None)
-        m.update(
-            {
-                "version": 0,
-                "parent": None,
-                "op": "create",
-                "cloned_from": {
-                    "path": self.path,
-                    "version": src_v,
-                    "deep": True,
-                },
-                "txn": None,
-                "txns": [],
-            }
+        m = self._child(
+            ptr,
+            None,
+            "create",
+            cloned_from={"path": self.path, "version": src_v, "deep": True},
+            txns=[],
         )
         if dv_mapping:
             m["delete_vectors"] = [
@@ -3788,11 +3784,7 @@ class VersionedTable:
             ]
         else:
             m.update(_remap_body(m))
-        if not dest._try_commit(m, 0):
-            raise ConcurrentWriteError(
-                f"VersionedTable: deep_clone raced another create at "
-                f"{dest_path}"
-            )
+        dest._commit_once(m)
         # NO back-registry at the source — independence is the point:
         # source vacuum owes this clone nothing
         return dest
@@ -3933,42 +3925,26 @@ class VersionedTable:
             or {f.name: i + 1 for i, f in enumerate(schema.fields)}
         )
         field_ids[name] = max(field_ids.values(), default=0) + 1
-        n_files = ptr.get("n_files")
-        if n_files is None:
-            n_files = len(ptr.get("files") or [])
-        v = parent + 1
-        m = dict(ptr)
-        for stale in (
-            "merge_on", "mode", "predicate", "cdc", "restored_from",
-        ):
-            m.pop(stale, None)
-        m.update(
-            {
-                "version": v,
-                "parent": parent,
-                "op": "add_column",
-                "schema": merged.simpleString(),
-                "schema_json": merged.json(),
+        return self._commit_once(
+            self._child(
+                ptr,
+                parent,
+                "add_column",
+                txn,
+                schema=merged.simpleString(),
+                schema_json=merged.json(),
                 # existing files lack the column → reads NULL-fill
                 # through the mixed projection (unless the table is
                 # empty, where the next write lands the full schema)
-                "mixed": bool(ptr.get("mixed")) or n_files > 0,
-                "txn": txn,
-                "txns": self._txns_after(ptr, txn),
-                "field_ids": field_ids,
-            }
-        )
-        if not self._try_commit(m, v):
-            raise ConcurrentWriteError(
-                f"VersionedTable: add_column raced past stale "
-                f"v{parent}; head is now v{self.head_version()} — re-run"
+                mixed=bool(ptr.get("mixed")) or self._n_files(ptr) > 0,
+                field_ids=field_ids,
             )
-        return v
+        )
 
     def properties(self) -> dict[str, str]:
         """The table's user-level properties (TBLPROPERTIES) as of the
         head — one pointer read, the map is carried forward by every
-        commit (``_carry_mapping``)."""
+        commit (:meth:`_child`)."""
         return dict(
             self._read_pointer(self.head_version()).get("properties") or {}
         )
@@ -4059,28 +4035,15 @@ class VersionedTable:
     def _commit_properties(self, fn, txn: str | None) -> int:
         parent = self.head_version()
         ptr = self._read_pointer(parent)
-        v = parent + 1
-        m = dict(ptr)
-        for stale in (
-            "merge_on", "mode", "predicate", "cdc", "restored_from",
-        ):
-            m.pop(stale, None)
-        m.update(
-            {
-                "version": v,
-                "parent": parent,
-                "op": "set_properties",
-                "txn": txn,
-                "txns": self._txns_after(ptr, txn),
-                "properties": fn(dict(ptr.get("properties") or {})),
-            }
-        )
-        if not self._try_commit(m, v):
-            raise ConcurrentWriteError(
-                f"VersionedTable: set/unset_properties raced past stale "
-                f"v{parent}; head is now v{self.head_version()} — re-run"
+        return self._commit_once(
+            self._child(
+                ptr,
+                parent,
+                "set_properties",
+                txn,
+                properties=fn(dict(ptr.get("properties") or {})),
             )
-        return v
+        )
 
     def add_constraint(
         self, cname: str, expr: str, txn: str | None = None
@@ -4115,29 +4078,14 @@ class VersionedTable:
         self._check_constraints(
             base["files"], {**base, "constraints": {cname: expr}}
         )
-        v = parent + 1
-        m = dict(ptr)
-        for stale in (
-            "merge_on", "mode", "predicate", "cdc", "restored_from",
-        ):
-            m.pop(stale, None)
-        m.update(
-            {
-                "version": v,
-                "parent": parent,
-                "op": "add_constraint",
-                "txn": txn,
-                "txns": self._txns_after(ptr, txn),
-                "constraints": {**existing, cname: expr},
-            }
+        m = self._child(
+            ptr,
+            parent,
+            "add_constraint",
+            txn,
+            constraints={**existing, cname: expr},
         )
-        self._add_feature(m, "constraints")
-        if not self._try_commit(m, v):
-            raise ConcurrentWriteError(
-                f"VersionedTable: add_constraint raced past stale "
-                f"v{parent}; head is now v{self.head_version()} — re-run"
-            )
-        return v
+        return self._commit_once(self._add_feature(m, "constraints"))
 
     def drop_constraint(self, cname: str, txn: str | None = None) -> int:
         """ALTER TABLE DROP CONSTRAINT (r12): metadata-only removal;
@@ -4153,28 +4101,11 @@ class VersionedTable:
                 f"'{cname}' (have: {sorted(existing)})"
             )
         existing.pop(cname)
-        v = parent + 1
-        m = dict(ptr)
-        for stale in (
-            "merge_on", "mode", "predicate", "cdc", "restored_from",
-        ):
-            m.pop(stale, None)
-        m.update(
-            {
-                "version": v,
-                "parent": parent,
-                "op": "drop_constraint",
-                "txn": txn,
-                "txns": self._txns_after(ptr, txn),
-                "constraints": existing,
-            }
-        )
-        if not self._try_commit(m, v):
-            raise ConcurrentWriteError(
-                f"VersionedTable: drop_constraint raced past stale "
-                f"v{parent}; head is now v{self.head_version()} — re-run"
+        return self._commit_once(
+            self._child(
+                ptr, parent, "drop_constraint", txn, constraints=existing
             )
-        return v
+        )
 
     @staticmethod
     def _merge_stats_entry(old, new):
@@ -4305,22 +4236,13 @@ class VersionedTable:
             if (cur_bloom or added_bloom)
             else None
         )
-        v = parent + 1
-        m = dict(ptr)
-        for stale in (
-            "merge_on", "mode", "predicate", "cdc", "restored_from",
-        ):
-            m.pop(stale, None)
-        m.update(
-            {
-                "version": v,
-                "parent": parent,
-                "op": "analyze",
-                "txn": txn,
-                "txns": self._txns_after(ptr, txn),
-                "stats_cols": new_stats_cols,
-                "bloom": new_bloom_cfg,
-            }
+        m = self._child(
+            ptr,
+            parent,
+            "analyze",
+            txn,
+            stats_cols=new_stats_cols,
+            bloom=new_bloom_cfg,
         )
         if "segments" in ptr:
             segs = []
@@ -4357,12 +4279,7 @@ class VersionedTable:
             m["stats"] = merged_all
         if new_bloom_cfg:
             self._add_feature(m, "bloom")
-        if not self._try_commit(m, v):
-            raise ConcurrentWriteError(
-                f"VersionedTable: analyze raced past stale v{parent}; "
-                f"head is now v{self.head_version()} — re-run"
-            )
-        return v
+        return self._commit_once(m)
 
     def rename_column(self, old: str, new: str, txn: str | None = None) -> int:
         """Column RENAME as a METADATA-ONLY commit (VERDICT r9 #4 —
@@ -4460,37 +4377,24 @@ class VersionedTable:
             pb = new if pb == old else pb
         elif pb:
             pb = [new if c == old else c for c in pb]
-        n_files = ptr.get("n_files")
-        if n_files is None:
-            n_files = len(ptr.get("files") or [])
-        v = parent + 1
-        m = dict(ptr)
-        for stale in (
-            "merge_on", "mode", "predicate", "cdc", "restored_from",
-        ):
-            m.pop(stale, None)
-        m.update(
-            {
-                "version": v,
-                "parent": parent,
-                "op": "rename",
-                "schema": merged.simpleString(),
-                "schema_json": merged.json(),
-                # pre-rename files now carry a different physical name
-                # for the field → reads must footer-merge (unless the
-                # table is empty)
-                "mixed": bool(ptr.get("mixed")) or n_files > 0,
-                "txn": txn,
-                "txns": self._txns_after(ptr, txn),
-                "stats_cols": [
-                    new if c == old else c
-                    for c in (ptr.get("stats_cols") or [])
-                ],
-                "partition_by": pb,
-                "aliases": aliases,
-                "field_ids": field_ids,
-                "generated": gen,
-            }
+        m = self._child(
+            ptr,
+            parent,
+            "rename",
+            txn,
+            schema=merged.simpleString(),
+            schema_json=merged.json(),
+            # pre-rename files now carry a different physical name for
+            # the field → reads must footer-merge (unless the table is
+            # empty)
+            mixed=bool(ptr.get("mixed")) or self._n_files(ptr) > 0,
+            stats_cols=[
+                new if c == old else c for c in (ptr.get("stats_cols") or [])
+            ],
+            partition_by=pb,
+            aliases=aliases,
+            field_ids=field_ids,
+            generated=gen,
         )
         if ptr.get("identity"):
             m["identity"] = ids
@@ -4501,13 +4405,7 @@ class VersionedTable:
             m["bucket_by"] = {**bk, "col": new}
         # readers must walk the alias chain or miss the column in
         # pre-rename footers — gate them (protocol feature, r12)
-        self._add_feature(m, "column_mapping")
-        if not self._try_commit(m, v):
-            raise ConcurrentWriteError(
-                f"VersionedTable: rename_column raced past stale "
-                f"v{parent}; head is now v{self.head_version()} — re-run"
-            )
-        return v
+        return self._commit_once(self._add_feature(m, "column_mapping"))
 
     def drop_column(self, name: str, txn: str | None = None) -> int:
         """Column DROP as a METADATA-ONLY commit (VERDICT r10 #7 —
@@ -4605,35 +4503,21 @@ class VersionedTable:
             ptr.get("field_ids") or {n: i + 1 for i, n in enumerate(names)}
         )
         field_ids.pop(name, None)
-        n_files = ptr.get("n_files")
-        if n_files is None:
-            n_files = len(ptr.get("files") or [])
-        v = parent + 1
-        m = dict(ptr)
-        for stale in (
-            "merge_on", "mode", "predicate", "cdc", "restored_from",
-        ):
-            m.pop(stale, None)
-        m.update(
-            {
-                "version": v,
-                "parent": parent,
-                "op": "drop",
-                "schema": merged.simpleString(),
-                "schema_json": merged.json(),
-                # existing files carry MORE columns than the manifest
-                # declares → reads must project the manifest schema
-                "mixed": bool(ptr.get("mixed")) or n_files > 0,
-                "txn": txn,
-                "txns": self._txns_after(ptr, txn),
-                "stats_cols": [
-                    c for c in (ptr.get("stats_cols") or []) if c != name
-                ],
-                "aliases": aliases,
-                "field_ids": field_ids,
-                "dropped_phys": dropped,
-                "generated": gen,
-            }
+        m = self._child(
+            ptr,
+            parent,
+            "drop",
+            txn,
+            schema=merged.simpleString(),
+            schema_json=merged.json(),
+            # existing files carry MORE columns than the manifest
+            # declares → reads must project the manifest schema
+            mixed=bool(ptr.get("mixed")) or self._n_files(ptr) > 0,
+            stats_cols=[c for c in (ptr.get("stats_cols") or []) if c != name],
+            aliases=aliases,
+            field_ids=field_ids,
+            dropped_phys=dropped,
+            generated=gen,
         )
         if ptr.get("identity"):
             # dropping the identity column retires its sequence
@@ -4643,13 +4527,7 @@ class VersionedTable:
                 m.pop("identity", None)
         # readers must honor dropped_phys or resurrect the column from
         # old footers — gate them (protocol feature, r12)
-        self._add_feature(m, "column_mapping")
-        if not self._try_commit(m, v):
-            raise ConcurrentWriteError(
-                f"VersionedTable: drop_column raced past stale "
-                f"v{parent}; head is now v{self.head_version()} — re-run"
-            )
-        return v
+        return self._commit_once(self._add_feature(m, "column_mapping"))
 
     # lossless primitive widenings (Iceberg/Delta type-widening set,
     # plus int→double which is exact for 32-bit integers); Spark 4's
@@ -4725,38 +4603,20 @@ class VersionedTable:
                 for f in schema.fields
             ]
         )
-        n_files = ptr.get("n_files")
-        if n_files is None:
-            n_files = len(ptr.get("files") or [])
-        v = parent + 1
-        m = dict(ptr)
-        for stale in (
-            "merge_on", "mode", "predicate", "cdc", "restored_from",
-        ):
-            m.pop(stale, None)
-        m.update(
-            {
-                "version": v,
-                "parent": parent,
-                "op": "widen",
-                "schema": merged.simpleString(),
-                "schema_json": merged.json(),
-                # existing files carry the NARROW physical type →
-                # reads must request the manifest schema
-                "mixed": bool(ptr.get("mixed")) or n_files > 0,
-                "txn": txn,
-                "txns": self._txns_after(ptr, txn),
-            }
+        m = self._child(
+            ptr,
+            parent,
+            "widen",
+            txn,
+            schema=merged.simpleString(),
+            schema_json=merged.json(),
+            # existing files carry the NARROW physical type → reads
+            # must request the manifest schema
+            mixed=bool(ptr.get("mixed")) or self._n_files(ptr) > 0,
         )
         # readers must request the manifest type over narrower footers
         # or fail/misread the promotion — gate them (r12)
-        self._add_feature(m, "widen")
-        if not self._try_commit(m, v):
-            raise ConcurrentWriteError(
-                f"VersionedTable: widen_column raced past stale "
-                f"v{parent}; head is now v{self.head_version()} — re-run"
-            )
-        return v
+        return self._commit_once(self._add_feature(m, "widen"))
 
     def register_bucketed(
         self, name: str, version: int | None = None, mode: str = "link"
@@ -4953,28 +4813,15 @@ class VersionedTable:
                         "would misread under a new spec; OPTIMIZE "
                         "first to rewrite under a recorded spec"
                     )
-        v = parent + 1
-        m = dict(ptr)
-        for stale in (
-            "merge_on", "mode", "predicate", "cdc", "restored_from",
-        ):
-            m.pop(stale, None)
-        m.update(
-            {
-                "version": v,
-                "parent": parent,
-                "op": "set_partition_spec",
-                "partition_by": partition_by,
-                "txn": txn,
-                "txns": self._txns_after(ptr, txn),
-            }
-        )
-        if not self._try_commit(m, v):
-            raise ConcurrentWriteError(
-                f"VersionedTable: set_partition_spec raced past stale "
-                f"v{parent}; head is now v{self.head_version()} — re-run"
+        return self._commit_once(
+            self._child(
+                ptr,
+                parent,
+                "set_partition_spec",
+                txn,
+                partition_by=partition_by,
             )
-        return v
+        )
 
     def _touched_files(
         self,
@@ -5100,10 +4947,8 @@ class VersionedTable:
         touched_files = self._touched_files(
             base, predicate, prune, verify_prune
         )
-        touched = set(touched_files)
         if not touched_files:
             return parent
-        kept_files = [f for f in base["files"] if f not in touched]
         keep_rows = ~F.coalesce(F.expr(predicate), F.lit(False))
         remaining = self._read_files(base, touched_files).filter(keep_rows)
         cdc_dir = None
@@ -5125,7 +4970,6 @@ class VersionedTable:
             # the old limit(1) probe executed the preimage scan once
             # and the write executed it again.
             cdc_dir = self._write_cdc_if_any(removed, parent + 1)
-        partition_by = base.get("partition_by")
         # bounded action over the touched files only: an all-rows-
         # deleted rewrite must commit an empty file set. Write-first
         # (r16, drop_if_empty): the old limit(1) probe executed the
@@ -5133,110 +4977,25 @@ class VersionedTable:
         new_files = self._write_data(
             remaining,
             parent + 1,
-            partition_by,
+            base.get("partition_by"),
             base.get("bucket_by"),
             drop_if_empty=True,
         )
-        stats_cols = base.get("stats_cols") or []
-        new_stats = (
-            self._collect_stats(new_files, stats_cols, base.get("bloom"))
-            if "segments" not in ptr
-            and (stats_cols or base.get("bloom"))
-            and new_files
-            else {}
-        )
-        new_parts = (
-            self._partition_values(new_files, partition_by)
-            if "segments" not in ptr and partition_by
-            else {}
-        )
-        new_segs = None
-        for _ in range(10):
-            v = parent + 1
-            m = {
-                "version": v,
-                "parent": parent,
-                "op": "delete",
-                "predicate": predicate,
-                # on a rebase the winner may have evolved the schema
-                # additively — the commit keeps the HEAD's logical
-                # schema; the rewritten files are then one more
-                # physical generation under it
-                "schema": base["schema"],
-                "schema_json": base.get("schema_json"),
-                # kept files may still span pre-evolution physical
-                # schemas
-                "mixed": bool(base.get("mixed")),
-                "txn": txn,
-                "txns": self._txns_after(base, txn),
-                # from the REBASED head, not the pre-race capture: an
-                # analyze winner may have extended the index config
-                "stats_cols": base.get("stats_cols") or [],
-                "bloom": base.get("bloom"),
-                "partition_by": partition_by,
-                # a delete keeps a subset of already-valid rows — no
-                # check
-                "constraints": base.get("constraints") or {},
-            }
-            m = self._carry_mapping(m, base)
-            if cdc_dir:
-                m["cdc"] = cdc_dir
-            if base.get("delete_vectors"):
-                # rewritten files dropped their DV'd rows physically;
-                # kept files still need the vectors applied at read
-                # time
-                m["delete_vectors"] = base["delete_vectors"]
-            if "segments" in ptr:
-                segs = self._segments_without(ptr, touched)
-                if new_files:
-                    if new_segs is None:
-                        new_segs = self._build_segments(
-                            new_files,
-                            stats_cols,
-                            partition_by,
-                            base.get("bloom"),
-                        )
-                    segs.extend(new_segs)
-                m["segments"] = segs
-                m["n_files"] = len(kept_files) + len(new_files)
-            else:
-                kept_set = set(kept_files)
-                m["files"] = sorted(kept_files + new_files)
-                m["stats"] = {
-                    **{
-                        f: s
-                        for f, s in (base.get("stats") or {}).items()
-                        if f in kept_set
-                    },
-                    **new_stats,
-                }
-                m["parts"] = {
-                    **{
-                        f: p
-                        for f, p in (base.get("parts") or {}).items()
-                        if f in kept_set
-                    },
-                    **new_parts,
-                }
-            if self._try_commit(m, v):
-                return v
-            # CAS lost. Delta's file-granularity conflict rules (r11):
-            # a DELETE commutes with appends AND with disjoint
-            # rewrites — any winner that neither touched this delete's
-            # files nor added rows the predicate covers. Verify, then
-            # rebase the already-written rewrite onto the new head;
-            # anything else still raises.
-            parent, ptr, base = self._rebase_over_disjoint(
-                parent,
-                ptr,
-                base,
+        # a delete keeps a subset of already-valid rows: no CHECK pass
+        return self._commit(
+            "delete",
+            (parent, ptr, base),
+            touched_files,
+            new_files,
+            partial(
+                self._rebase_over_disjoint,
                 "delete",
-                touched,
+                set(touched_files),
                 self._stale_if_predicate_match(predicate),
-            )
-            kept_files = [f for f in base["files"] if f not in touched]
-        raise ConcurrentWriteError(
-            "VersionedTable: delete lost 10 CAS races"
+            ),
+            lambda _head: {"predicate": predicate, "cdc": cdc_dir},
+            txn,
+            check=False,
         )
 
     def overwrite_where(
@@ -5298,7 +5057,7 @@ class VersionedTable:
                 ]
                 order += [c for c in df.columns if c not in order]
                 df = df.select(*order)
-        sch = self._check_schema(df, parent)
+        sch = self._check_schema(df, ptr)
         # conformance probe (bounded: first violation only) — BEFORE
         # any file is written
         stray = (
@@ -5319,8 +5078,6 @@ class VersionedTable:
         touched_files = self._touched_files(
             base, predicate, prune, verify_prune
         )
-        touched = set(touched_files)
-        kept_files = [f for f in base["files"] if f not in touched]
         # probe the replacement frame only when nothing was touched —
         # the common touched-files path skips the extra job (r16)
         if not touched_files and not df.limit(1).count():
@@ -5351,123 +5108,40 @@ class VersionedTable:
             if removed is not None:
                 cdc = removed.unionByName(cdc, allowMissingColumns=True)
             cdc_dir = self._write_cdc_if_any(cdc, parent + 1)
-        partition_by = base.get("partition_by")
         # write-first (r16, drop_if_empty): the old limit(1) probe
         # executed the keep-rows scan + replacement union once for the
         # gate and again for the write
         new_files = self._write_data(
             combined,
             parent + 1,
-            partition_by,
+            base.get("partition_by"),
             base.get("bucket_by"),
             drop_if_empty=True,
         )
-        id_marks = (
-            self._identity_watermark(new_files, id_map, id_alloc)
-            if id_alloc and new_files
-            else {}
-        )
-        stats_cols = base.get("stats_cols") or []
-        new_stats = (
-            self._collect_stats(new_files, stats_cols, base.get("bloom"))
-            if "segments" not in ptr
-            and (stats_cols or base.get("bloom"))
-            and new_files
-            else {}
-        )
-        new_parts = (
-            self._partition_values(new_files, partition_by)
-            if "segments" not in ptr and partition_by
-            else {}
-        )
-        new_segs = None
-        checked = False
-        for _ in range(10):
-            v = parent + 1
-            m = {
-                "version": v,
-                "parent": parent,
-                "op": "replace_where",
-                "predicate": predicate,
-                "schema": sch["schema"],
-                "schema_json": sch["schema_json"],
-                "mixed": bool(base.get("mixed")) or bool(sch["mixed"]),
-                "txn": txn,
-                "txns": self._txns_after(base, txn),
-                "stats_cols": base.get("stats_cols") or [],
-                "bloom": base.get("bloom"),
-                "partition_by": partition_by,
-                "constraints": base.get("constraints") or {},
-            }
-            m = self._carry_mapping(m, base)
-            if id_marks:
-                m["identity"] = self._bump_identity(
-                    ptr.get("identity") or id_map, id_marks
-                )
-            if cdc_dir:
-                m["cdc"] = cdc_dir
-            if base.get("delete_vectors"):
-                m["delete_vectors"] = base["delete_vectors"]
-            if "segments" in ptr:
-                segs = self._segments_without(ptr, touched)
-                if new_files:
-                    if new_segs is None:
-                        new_segs = self._build_segments(
-                            new_files,
-                            stats_cols,
-                            partition_by,
-                            base.get("bloom"),
-                        )
-                    segs.extend(new_segs)
-                m["segments"] = segs
-                m["n_files"] = len(kept_files) + len(new_files)
-            else:
-                kept_set = set(kept_files)
-                m["files"] = sorted(kept_files + new_files)
-                m["stats"] = {
-                    **{
-                        f: s
-                        for f, s in (base.get("stats") or {}).items()
-                        if f in kept_set
-                    },
-                    **new_stats,
-                }
-                m["parts"] = {
-                    **{
-                        f: p
-                        for f, p in (base.get("parts") or {}).items()
-                        if f in kept_set
-                    },
-                    **new_parts,
-                }
-            if not checked:
-                # the replacement rows are NEW — CHECK constraints
-                # must hold on them (remaining rows re-validate for
-                # free; they were already valid). New files carry no
-                # DVs.
-                self._check_constraints(
-                    new_files, {**m, "delete_vectors": []}
-                )
-                checked = True
-            if self._try_commit(m, v):
-                return v
-            parent, ptr, base = self._rebase_over_disjoint(
-                parent,
-                ptr,
-                base,
-                "replace_where",
-                touched,
-                self._stale_if_predicate_match(predicate),
+        extra = {"predicate": predicate, "cdc": cdc_dir, **sch}
+        if id_alloc and new_files:
+            extra["identity"] = self._bump_identity(
+                id_map, self._identity_watermark(new_files, id_map, id_alloc)
             )
-            if id_alloc and (ptr.get("identity") or {}) != id_map:
-                raise ConcurrentWriteError(
-                    "VersionedTable: replace_where raced a commit "
-                    "that advanced the identity watermark; the "
-                    "staged ids are stale — re-run"
-                )
-            kept_files = [f for f in base["files"] if f not in touched]
-        raise ConcurrentWriteError(
-            "VersionedTable: overwrite_where lost 10 CAS races"
+        # the replacement rows are NEW, so CHECK constraints must hold
+        # on them (the kept rows were already valid)
+        return self._commit(
+            "replace_where",
+            (parent, ptr, base),
+            touched_files,
+            new_files,
+            partial(
+                self._rebase_over_disjoint,
+                "replace_where",
+                set(touched_files),
+                self._stale_if_predicate_match(predicate),
+                ids=id_map if id_alloc else None,
+            ),
+            lambda head: {
+                **extra,
+                "mixed": bool(head.get("mixed")) or sch["mixed"],
+            },
+            txn,
         )
 
     # commit ops a lost CAS race can rebase OVER: appends and
@@ -5492,7 +5166,14 @@ class VersionedTable:
     )
 
     def _rebase_over_disjoint(
-        self, parent: int, ptr: dict, base: dict, op: str, touched, is_stale
+        self,
+        op: str,
+        touched,
+        is_stale,
+        parent: int,
+        ptr: dict,
+        base: dict,
+        ids: dict | None = None,
     ):
         """After a file-scoped rewrite lost its CAS: decide whether the
         staged change set still holds on the new head, at FILE
@@ -5515,12 +5196,15 @@ class VersionedTable:
            set mis-classified (an appended/updated row the predicate
            or merge keys now cover).
 
-        Returns the new ``(head, pointer, manifest)`` to rebase onto;
-        any violated rule raises :class:`ConcurrentWriteError` and the
-        caller must recompute. Cost is O(span metadata) + one scan of
-        the span's added files — never a re-scan of the table."""
-        from urllib.parse import unquote, urlparse
+        ``ids`` is the identity map the staged rows allocated from; a
+        winner that advanced it stales them (:meth:`_refuse_stale_ids`).
 
+        Returns the new ``(head, pointer, manifest)`` to rebase onto —
+        the ``rebase`` policy of :meth:`_commit`, bound to the op by
+        ``functools.partial``; any violated rule raises
+        :class:`ConcurrentWriteError` and the caller must recompute.
+        Cost is O(span metadata) + one scan of the span's added files —
+        never a re-scan of the table."""
         new_head = self.head_version()
         span = [v2 for v2 in self.versions() if parent < v2 <= new_head]
         bad = [
@@ -5550,21 +5234,13 @@ class VersionedTable:
             for d in (new_base.get("delete_vectors") or [])
             if d not in set(base.get("delete_vectors") or [])
         ]
-        if new_dvs and touched:
-            # bounded by the winners' vectors: file-level keys only
-            dv_files = {
-                unquote(urlparse(r[0]).path)
-                for r in self.spark.read.parquet(*new_dvs)
-                .select(self._DV_FILE)
-                .distinct()
-                .collect()
-            }
-            if dv_files & touched:
-                raise ConcurrentWriteError(
-                    f"VersionedTable: {op} raced a deletion vector on "
-                    "a file it rewrote — the staged output would "
-                    "resurrect those rows; re-run against the new head"
-                )
+        # bounded by the winners' vectors: file-level keys only
+        if new_dvs and touched and self._dv_files(*new_dvs) & touched:
+            raise ConcurrentWriteError(
+                f"VersionedTable: {op} raced a deletion vector on "
+                "a file it rewrote — the staged output would "
+                "resurrect those rows; re-run against the new head"
+            )
         added = sorted(set(new_base["files"]) - set(base["files"]))
         if added:
             # one bounded scan of just the winners' files, DV-applied
@@ -5575,6 +5251,8 @@ class VersionedTable:
                 raise ConcurrentWriteError(
                     f"VersionedTable: {op} {reason}"
                 )
+        if ids is not None:
+            self._refuse_stale_ids(op, new_ptr, ids)
         return new_head, new_ptr, new_base
 
     def _stale_if_predicate_match(self, predicate: str):
@@ -5648,64 +5326,22 @@ class VersionedTable:
         apply_light_committer(
             hits.write.mode("error"), self.spark
         ).parquet(dv_dir)
-        from urllib.parse import unquote, urlparse
-
-        # the files this vector names: the staged (file, position)
-        # keys stay valid on a rebase iff no winner rewrote one of
-        # them — file-level metadata, bounded by the matched files
-        dv_touched = {
-            unquote(urlparse(r[0]).path)
-            for r in self.spark.read.parquet(dv_dir)
-            .select(self._DV_FILE)
-            .distinct()
-            .collect()
-        }
-        for _ in range(10):
-            v = parent + 1
-            m = dict(ptr)
-            # drop op-specific keys a previous commit may have left in
-            # the pointer (a stale merge_on/predicate would misdescribe
-            # THIS commit in history inspection; an inherited cdc dir
-            # would double-count the WINNER's changes at this version)
-            for stale in (
-                "merge_on", "mode", "predicate", "txn", "cdc",
-                "restored_from",
-            ):
-                m.pop(stale, None)
-            m.update(
-                {
-                    "version": v,
-                    "parent": parent,
-                    "op": "delete",
-                    "mode": "mor",
-                    "predicate": predicate,
-                    "txn": txn,
-                    "txns": self._txns_after(ptr, txn),
-                    "delete_vectors": (ptr.get("delete_vectors") or [])
-                    + [dv_dir],
-                }
-            )
-            # readers must anti-join the vector or resurrect rows —
-            # gate them (protocol feature, r12)
-            self._add_feature(m, "dv")
-            if self._try_commit(m, v):
-                return v
-            # the vector names (file, position) keys — appends never
-            # move files and disjoint rewrites by definition don't
-            # touch the vectored files, so the keys stay valid on the
-            # new head; the same file-granularity rules as COW delete
-            # apply (r11): a winner that rewrote a vectored file, or
-            # added rows the predicate covers, raises
-            parent, ptr, base = self._rebase_over_disjoint(
-                parent,
-                ptr,
-                base,
+        # the vector names (file, position) keys: they stay valid on a
+        # rebase iff no winner rewrote or vectored one of those files
+        return self._commit(
+            "delete",
+            (parent, ptr, base),
+            (),
+            [],
+            partial(
+                self._rebase_over_disjoint,
                 "delete(mor)",
-                dv_touched,
+                self._dv_files(dv_dir),
                 self._stale_if_predicate_match(predicate),
-            )
-        raise ConcurrentWriteError(
-            "VersionedTable: delete(mor) lost 10 CAS races"
+            ),
+            lambda _head: {"mode": "mor", "predicate": predicate},
+            txn,
+            dv_dir=dv_dir,
         )
 
     #: target rows per MoR-written file — sizes new-rows-only commits
@@ -5857,15 +5493,7 @@ class VersionedTable:
             rows.select(self._DV_FILE, self._DV_POS).write.mode("error"),
             self.spark,
         ).parquet(dv_dir)
-        from urllib.parse import unquote, urlparse
-
-        dv_touched = {
-            unquote(urlparse(r[0]).path)
-            for r in self.spark.read.parquet(dv_dir)
-            .select(self._DV_FILE)
-            .distinct()
-            .collect()
-        }
+        dv_touched = self._dv_files(dv_dir)
         # …and the post-images land as NEW files (never a rewrite),
         # explicitly sized from the vector's row count (a columnar
         # count over the just-written DV parquet — footer metadata,
@@ -5898,83 +5526,26 @@ class VersionedTable:
                 ),
                 v,
             )
-        stats_cols = base.get("stats_cols") or []
-        new_stats = (
-            self._collect_stats(new_files, stats_cols, base.get("bloom"))
-            if "segments" not in ptr and (stats_cols or base.get("bloom"))
-            else {}
-        )
-        new_parts = (
-            self._partition_values(new_files, partition_by)
-            if "segments" not in ptr and partition_by
-            else {}
-        )
-        new_segs = None
-        checked = False
-        for _ in range(10):
-            v = parent + 1
-            m = dict(ptr)
-            for stale in (
-                "merge_on", "mode", "predicate", "txn", "cdc",
-                "restored_from",
-            ):
-                m.pop(stale, None)
-            m.update(
-                {
-                    "version": v,
-                    "parent": parent,
-                    "op": "update",
-                    "mode": "mor",
-                    "predicate": predicate,
-                    "txn": txn,
-                    "txns": self._txns_after(ptr, txn),
-                    "delete_vectors": (ptr.get("delete_vectors") or [])
-                    + [dv_dir],
-                }
-            )
-            if "segments" in ptr:
-                if new_segs is None:
-                    new_segs = self._build_segments(
-                        new_files,
-                        stats_cols,
-                        partition_by,
-                        base.get("bloom"),
-                    )
-                # every parent segment carries BY NAME — the zero-
-                # rewrite contract at the metadata layer too
-                m["segments"] = list(ptr["segments"]) + new_segs
-                m["n_files"] = ptr["n_files"] + len(new_files)
-            else:
-                m["files"] = sorted(base["files"] + new_files)
-                m["stats"] = {**(base.get("stats") or {}), **new_stats}
-                m["parts"] = {**(base.get("parts") or {}), **new_parts}
-            if cdc_dir:
-                m["cdc"] = cdc_dir
-            self._add_feature(m, "dv")
-            if not checked:
-                # post-images can leave a CHECK; new files carry no
-                # vectors, skip the anti-join
-                self._check_constraints(
-                    new_files, {**m, "delete_vectors": []}
-                )
-                checked = True
-            if self._try_commit(m, v):
-                return v
-            # same file-granularity rules as delete(mor): the vector's
-            # (file, position) keys survive appends and disjoint
-            # rewrites; a winner that rewrote/vectored one of the
-            # vectored files, or added rows the predicate covers,
-            # raises
-            parent, ptr, base = self._rebase_over_disjoint(
-                parent,
-                ptr,
-                base,
+        # every parent segment carries BY NAME — the zero-rewrite
+        # contract at the metadata layer too
+        return self._commit(
+            "update",
+            (parent, ptr, base),
+            (),
+            new_files,
+            partial(
+                self._rebase_over_disjoint,
                 "update(mor)",
                 dv_touched,
                 self._stale_if_predicate_match(predicate),
-            )
-        raise ConcurrentWriteError(
-            "VersionedTable: update(mor) lost 10 CAS races"
+            ),
+            lambda _head: {
+                "mode": "mor",
+                "predicate": predicate,
+                "cdc": cdc_dir,
+            },
+            txn,
+            dv_dir=dv_dir,
         )
 
     def merge(
@@ -6484,7 +6055,6 @@ class VersionedTable:
                 for r in bs_scan.select("__f").distinct().collect()
             }
         touched_files = [f for f in base["files"] if f in touched]
-        kept_files = [f for f in base["files"] if f not in touched]
 
         # rewritten rows: matched targets take the delete/update
         # clauses; unmatched rows in touched files carry unchanged
@@ -6885,25 +6455,14 @@ class VersionedTable:
                 apply_light_committer(
                     dv_rows.write.mode("error"), self.spark
                 ).parquet(dv_dir)
-                if self._dir_num_rows(dv_dir) == 0:
-                    if self._local:
-                        import shutil
-
-                        shutil.rmtree(dv_dir, ignore_errors=True)
-                    else:
-                        self._fs.delete(self._P(dv_dir), True)
-                    dv_dir = None
-                else:
+                if self._dir_has_rows(dv_dir):
                     # the files this vector names — the rebase guards
                     # exactly these (file, position) keys, like
                     # delete(mor); read over the (bounded) written dir
-                    dv_touched = {
-                        unquote(urlparse(r[0]).path)
-                        for r in self.spark.read.parquet(dv_dir)
-                        .select(self._DV_FILE)
-                        .distinct()
-                        .collect()
-                    }
+                    dv_touched = self._dv_files(dv_dir)
+                else:
+                    self._rm_dir(dv_dir)
+                    dv_dir = None
             if mor and dv_dir is None and not new_files:
                 # every clause hit was already vector-hidden and nothing
                 # inserted: no empty commits (the COW twin's contract)
@@ -6929,171 +6488,63 @@ class VersionedTable:
             if joined_cache is not None:
                 joined_cache.unpersist()
             raise
-        stats_cols = base.get("stats_cols") or []
         id_alloc_cols = (
             sorted(id_map)
             if id_map and when_not_matched_insert is not None
             else []
         )
-        id_marks = (
-            self._identity_watermark(new_files, id_map, id_alloc_cols)
-            if id_alloc_cols and new_files
-            else {}
-        )
-        new_stats = (
-            self._collect_stats(new_files, stats_cols, base.get("bloom"))
-            if "segments" not in ptr
-            and (stats_cols or base.get("bloom"))
-            and new_files
-            else {}
-        )
-        new_parts = (
-            self._partition_values(new_files, partition_by)
-            if "segments" not in ptr and partition_by
-            else {}
-        )
-        new_segs = None
-        checked = False
-        for _ in range(10):
-            v = parent + 1
-            m = {
-                "version": v,
-                "parent": parent,
-                "op": "merge",
-                "merge_on": list(on),
-                "schema": base["schema"],
-                "schema_json": base.get("schema_json"),
-                "mixed": bool(base.get("mixed")),
-                "txn": txn,
-                "txns": self._txns_after(base, txn),
-                # from the REBASED head, not the pre-race capture: an
-                # analyze winner may have extended the index config
-                "stats_cols": base.get("stats_cols") or [],
-                "bloom": base.get("bloom"),
-                "partition_by": partition_by,
-                "constraints": base.get("constraints") or {},
-            }
-            if mor:
-                m["mode"] = "mor"
-            if mor and dv_dir:
-                m["delete_vectors"] = (
-                    base.get("delete_vectors") or []
-                ) + [dv_dir]
-            elif base.get("delete_vectors"):
-                # rewritten files dropped their DV'd rows physically;
-                # kept files still need the vectors applied at read
-                # time
-                m["delete_vectors"] = base["delete_vectors"]
-            if "segments" in ptr:
-                # MoR keeps every parent segment BY NAME (zero file
-                # AND zero metadata rewrite); COW drops touched files
-                segs = (
-                    list(ptr["segments"])
-                    if mor
-                    else self._segments_without(ptr, touched)
-                )
-                if new_files:
-                    if new_segs is None:
-                        new_segs = self._build_segments(
-                            new_files,
-                            stats_cols,
-                            partition_by,
-                            base.get("bloom"),
-                        )
-                    segs.extend(new_segs)
-                m["segments"] = segs
-                m["n_files"] = (
-                    ptr["n_files"] if mor else len(kept_files)
-                ) + len(new_files)
-            elif mor:
-                m["files"] = sorted(base["files"] + new_files)
-                m["stats"] = {**(base.get("stats") or {}), **new_stats}
-                m["parts"] = {**(base.get("parts") or {}), **new_parts}
-            else:
-                kept_set = set(kept_files)
-                m["files"] = sorted(kept_files + new_files)
-                m["stats"] = {
-                    **{
-                        f: s
-                        for f, s in (base.get("stats") or {}).items()
-                        if f in kept_set
-                    },
-                    **new_stats,
-                }
-                m["parts"] = {
-                    **{
-                        f: p
-                        for f, p in (base.get("parts") or {}).items()
-                        if f in kept_set
-                    },
-                    **new_parts,
-                }
-            m = self._carry_mapping(m, base)
-            if id_marks:
-                m["identity"] = self._bump_identity(
-                    ptr.get("identity") or id_map, id_marks
-                )
-            if mor and dv_dir:
-                self._add_feature(m, "dv")
-            if cdc_dir:
-                m["cdc"] = cdc_dir
-            if not checked:
-                # updates and inserts can both push rows outside a
-                # CHECK; new files carry no deletion vectors, so skip
-                # the DV anti-join
-                self._check_constraints(
-                    new_files, {**m, "delete_vectors": []}
-                )
-                checked = True
-            if self._try_commit(m, v):
-                return v
-            # CAS lost. The r11 file-granularity rules, merge form: a
-            # winner commutes iff it neither touched a file this merge
-            # rewrote (every source-key MATCH lives in one of those)
-            # nor added rows that join the SOURCE on the merge keys
-            # (null-unsafe, the merge contract) — such a row would
-            # have been a MATCH this merge mis-classified as absent.
-            # One bounded semi-join over just the winners' added
-            # files decides; any other race raises.
-            def _stale_if_key_match(df: DataFrame):
-                if by_source:
-                    # a by-source clause classifies EVERY target row,
-                    # so any row the span added is a row this merge
-                    # never considered — matched or not
-                    if df.limit(1).count():
-                        return (
-                            "raced a commit that added rows — a NOT "
-                            "MATCHED BY SOURCE clause classifies every "
-                            "row, so the change set is stale; re-run"
-                        )
-                    return None
-                hit = df.select(*on).join(src_keys, list(on), "left_semi")
-                if hit.limit(1).count():
+        extra = {"merge_on": list(on), "mode": "mor" if mor else None}
+        if id_alloc_cols and new_files:
+            extra["identity"] = self._bump_identity(
+                id_map,
+                self._identity_watermark(new_files, id_map, id_alloc_cols),
+            )
+
+        # the merge form of the conflict rules: a winner's added rows
+        # must not join the SOURCE on the merge keys (null-unsafe, the
+        # merge contract) — such a row would have been a MATCH this
+        # merge mis-classified as absent
+        def _stale_if_key_match(df: DataFrame):
+            if by_source:
+                # a by-source clause classifies EVERY target row,
+                # so any row the span added is a row this merge
+                # never considered — matched or not
+                if df.limit(1).count():
                     return (
-                        "raced a commit whose added rows match the "
-                        "source keys — the computed change set "
-                        "mis-classifies them; re-run against the new "
-                        "head"
+                        "raced a commit that added rows — a NOT "
+                        "MATCHED BY SOURCE clause classifies every "
+                        "row, so the change set is stale; re-run"
                     )
                 return None
+            hit = df.select(*on).join(src_keys, list(on), "left_semi")
+            if hit.limit(1).count():
+                return (
+                    "raced a commit whose added rows match the "
+                    "source keys — the computed change set "
+                    "mis-classifies them; re-run against the new "
+                    "head"
+                )
+            return None
 
-            parent, ptr, base = self._rebase_over_disjoint(
-                parent,
-                ptr,
-                base,
+        # MoR keeps every parent file BY NAME (zero file AND zero
+        # metadata rewrite) and guards the VECTORED files; COW drops
+        # and guards the touched ones. Updates and inserts can both
+        # push rows outside a CHECK.
+        return self._commit(
+            "merge",
+            (parent, ptr, base),
+            () if mor else touched_files,
+            new_files,
+            partial(
+                self._rebase_over_disjoint,
                 "merge(mor)" if mor else "merge",
                 dv_touched if mor else touched,
                 _stale_if_key_match,
-            )
-            if id_alloc_cols and (ptr.get("identity") or {}) != id_map:
-                raise ConcurrentWriteError(
-                    "VersionedTable: merge raced a commit that "
-                    "advanced the identity watermark; the staged "
-                    "inserted ids are stale — re-run"
-                )
-            kept_files = [f for f in base["files"] if f not in touched]
-        raise ConcurrentWriteError(
-            "VersionedTable: merge lost 10 CAS races"
+                ids=id_map if id_alloc_cols else None,
+            ),
+            lambda _head: {**extra, "cdc": cdc_dir},
+            txn,
+            dv_dir=dv_dir,
         )
 
     def update(
@@ -7164,7 +6615,6 @@ class VersionedTable:
         touched = set(touched_files)
         if not touched_files:
             return parent
-        kept_files = [f for f in base["files"] if f not in touched]
         hit = F.coalesce(F.expr(predicate), F.lit(False))
 
         def _assigned(name):
@@ -7222,100 +6672,26 @@ class VersionedTable:
                 ),
                 parent + 1,
             )
-        partition_by = base.get("partition_by")
         new_files = self._write_data(
-            rewritten, parent + 1, partition_by, base.get("bucket_by")
+            rewritten,
+            parent + 1,
+            base.get("partition_by"),
+            base.get("bucket_by"),
         )
-        stats_cols = base.get("stats_cols") or []
-        new_stats = (
-            self._collect_stats(new_files, stats_cols, base.get("bloom"))
-            if "segments" not in ptr and (stats_cols or base.get("bloom"))
-            else {}
-        )
-        new_parts = (
-            self._partition_values(new_files, partition_by)
-            if "segments" not in ptr and partition_by
-            else {}
-        )
-        new_segs = None
-        checked = False
-        for _ in range(10):
-            v = parent + 1
-            kept_set = set(kept_files)
-            m = {
-                "version": v,
-                "parent": parent,
-                "op": "update",
-                "predicate": predicate,
-                "schema": base["schema"],
-                "schema_json": base.get("schema_json"),
-                "mixed": bool(base.get("mixed")),
-                "txn": txn,
-                "txns": self._txns_after(base, txn),
-                # from the REBASED head, not the pre-race capture: an
-                # analyze winner may have extended the index config
-                "stats_cols": base.get("stats_cols") or [],
-                "bloom": base.get("bloom"),
-                "partition_by": partition_by,
-                "constraints": base.get("constraints") or {},
-            }
-            if base.get("delete_vectors"):
-                # rewritten files dropped their DV'd rows physically;
-                # kept files still need the vectors applied at read
-                # time
-                m["delete_vectors"] = base["delete_vectors"]
-            if "segments" in ptr:
-                if new_segs is None:
-                    new_segs = self._build_segments(
-                        new_files, stats_cols, partition_by, base.get("bloom")
-                    )
-                m["segments"] = (
-                    self._segments_without(ptr, touched) + new_segs
-                )
-                m["n_files"] = len(kept_files) + len(new_files)
-            else:
-                m["files"] = sorted(kept_files + new_files)
-                m["stats"] = {
-                    **{
-                        f: s
-                        for f, s in (base.get("stats") or {}).items()
-                        if f in kept_set
-                    },
-                    **new_stats,
-                }
-                m["parts"] = {
-                    **{
-                        f: p
-                        for f, p in (base.get("parts") or {}).items()
-                        if f in kept_set
-                    },
-                    **new_parts,
-                }
-            m = self._carry_mapping(m, base)
-            if cdc_dir:
-                m["cdc"] = cdc_dir
-            if not checked:
-                # assignments can push rows outside a CHECK constraint;
-                # the rewritten files carry no deletion vectors — skip
-                # the anti-join
-                self._check_constraints(new_files, {**m, "delete_vectors": []})
-                checked = True
-            if self._try_commit(m, v):
-                return v
-            # same file-granularity rules as delete (r11): appends and
-            # disjoint rewrites whose rows miss the predicate commute;
-            # anything else raises
-            parent, ptr, base = self._rebase_over_disjoint(
-                parent,
-                ptr,
-                base,
+        # assignments can push rows outside a CHECK constraint
+        return self._commit(
+            "update",
+            (parent, ptr, base),
+            touched_files,
+            new_files,
+            partial(
+                self._rebase_over_disjoint,
                 "update",
                 touched,
                 self._stale_if_predicate_match(predicate),
-            )
-            kept_files = [f for f in base["files"] if f not in touched]
-        raise ConcurrentWriteError(
-            "VersionedTable: update lost 10 CAS races"
+            ),
+            lambda _head: {"predicate": predicate, "cdc": cdc_dir},
+            txn,
         )
 
     def optimize(
@@ -7323,7 +6699,6 @@ class VersionedTable:
         target_files: int = 1,
         recluster_by: str | None = None,
         zorder_by: list[str] | None = None,
-        max_retries: int = 10,
         where: list[tuple] | None = None,
     ) -> int:
         """Small-file compaction as a snapshot rewrite (the
@@ -7381,7 +6756,6 @@ class VersionedTable:
         else:
             touched_files = base["files"]
         touched = set(touched_files)
-        untouched = [f for f in base["files"] if f not in touched]
         df = self._read_files(base, touched_files)
         if zorder_by:
             from social_media_etl_spark.operators.warehouse import (
@@ -7400,110 +6774,40 @@ class VersionedTable:
             ).sortWithinPartitions(recluster_by)
         else:
             df = df.repartition(target_files)
-        partition_by = base.get("partition_by")
         files = self._write_data(
-            df, parent + 1, partition_by, base.get("bucket_by")
+            df, parent + 1, base.get("partition_by"), base.get("bucket_by")
         )
-        stats_cols = base.get("stats_cols") or []
-        if "segments" in base_ptr:
-            new_stats = new_parts = {}
-            compacted_segs = self._build_segments(
-                files, stats_cols, partition_by, base.get("bloom")
-            )
-        else:
-            new_stats = (
-                self._collect_stats(files, stats_cols, base.get("bloom"))
-                if stats_cols or base.get("bloom")
-                else {}
-            )
-            new_parts = (
-                self._partition_values(files, partition_by)
-                if partition_by
-                else {}
-            )
-            compacted_segs = None
-        compacted_parent = parent
-        head_ptr, head_m = base_ptr, base
-        for _ in range(max_retries):
-            head = self.head_version()
-            if head != compacted_parent:
-                # file-granularity rebase (r11): optimize commutes with
-                # appends AND with DISJOINT rewrites — any winner that
-                # left the compacted files alone. A content-identical
-                # rewrite has no change set for added rows to stale
-                # (is_stale → None); a winner that removed or vectored
-                # a compacted file raises (the compacted content is
-                # then stale and must be recomputed).
-                head, head_ptr, head_m = self._rebase_over_disjoint(
-                    compacted_parent,
-                    base_ptr,
-                    base,
-                    "optimize",
-                    touched,
-                    lambda df: None,
-                )
-            v = head + 1
-            m = {
-                "version": v,
-                "parent": head,
-                "op": "optimize",
-                # appends may have evolved the schema; the rebase keeps
-                # the HEAD's logical schema (compacted files are then a
-                # pre-evolution physical layout → mixed)
-                "schema": head_ptr["schema"],
-                "schema_json": head_ptr.get("schema_json"),
-                "txns": self._txns_after(head_ptr, None),
-                # from the REBASED head, not the pre-race capture: an
-                # analyze winner may have extended the index config
-                "stats_cols": head_ptr.get("stats_cols") or [],
-                "bloom": head_ptr.get("bloom"),
-                "partition_by": partition_by,
-                # content-identical rewrite of already-valid rows
-                "constraints": head_ptr.get("constraints") or {},
+
+        def fields(head: dict) -> dict:
+            # appends may have evolved the schema; the rebase keeps the
+            # HEAD's logical schema (compacted files are then a
+            # pre-evolution physical layout → mixed). touched ⊆ head
+            # files (the rebase proved no winner removed one), so the
+            # kept count is exact arithmetic.
+            kept_any = self._n_files(head) > len(touched)
+            return {
+                "mixed": (kept_any and bool(head.get("mixed")))
+                or (bool(files) and head["schema"] != base["schema"])
             }
-            m = self._carry_mapping(m, head_ptr)
-            # assembly is HEAD-relative: the new snapshot is the head's
-            # files minus the compacted ones plus their replacement —
-            # winners' appends AND disjoint rewrites carry through
-            # by construction (their files are simply "kept")
-            if compacted_segs is not None:
-                kept_segs = self._segments_without(head_ptr, touched)
-                m["segments"] = kept_segs + compacted_segs
-                # touched ⊆ head files (the rebase proved no winner
-                # removed one), so the kept count is exact arithmetic
-                m["n_files"] = head_ptr["n_files"] - len(touched) + len(files)
-                kept_any = head_ptr["n_files"] > len(touched)
-                m["mixed"] = (kept_any and bool(head_ptr.get("mixed"))) or (
-                    bool(files) and head_ptr["schema"] != base["schema"]
-                )
-            else:
-                head_stats = head_m.get("stats") or {}
-                head_parts = head_m.get("parts") or {}
-                kept = [f for f in head_m["files"] if f not in touched]
-                m["files"] = sorted(kept + files)
-                kept_any = bool(kept)
-                m["mixed"] = (kept_any and bool(head_m.get("mixed"))) or (
-                    bool(files) and head_m["schema"] != base["schema"]
-                )
-                m["stats"] = {
-                    **{f: head_stats[f] for f in kept if f in head_stats},
-                    **new_stats,
-                }
-                m["parts"] = {
-                    **{f: head_parts[f] for f in kept if f in head_parts},
-                    **new_parts,
-                }
-            if kept_any and head_m.get("delete_vectors"):
-                # scoped compaction: the head's vectors still hide rows
-                # of the carried-over files; entries for the vanished
-                # compacted files are inert (their paths match no
-                # scanned row). A winner's NEW vector on a compacted
-                # file was already rejected by the rebase.
-                m["delete_vectors"] = head_m["delete_vectors"]
-            if self._try_commit(m, v):
-                return v
-        raise ConcurrentWriteError(
-            f"VersionedTable: optimize lost {max_retries} CAS races"
+
+        # assembly is HEAD-relative: the new snapshot is the head's
+        # files minus the compacted ones plus their replacement, so
+        # winners' appends AND disjoint rewrites carry through by
+        # construction; a content-identical rewrite has no change set
+        # for added rows to stale, and needs no CHECK pass
+        return self._commit(
+            "optimize",
+            (parent, base_ptr, base),
+            touched_files,
+            files,
+            partial(
+                self._rebase_over_disjoint,
+                "optimize",
+                touched,
+                lambda df: None,
+            ),
+            fields,
+            check=False,
         )
 
     def _drop_view_registration(self, view_path) -> None:
@@ -7707,8 +7011,8 @@ class VersionedTable:
                     if not dry_run:
                         self._drop_view_registration(st.getPath())
                     _sweep(st.getPath())
-        # orphan segments: lost CAS races leave segment files no
-        # pointer references; referenced-by-ANY-manifest segments stay
+        # orphan segments: a commit that lost its CAS leaves segment
+        # files no pointer references; referenced-by-ANY-manifest segments stay
         # (old versions' metadata remains readable even after their
         # data is vacuumed)
         referenced = set()

@@ -2217,3 +2217,80 @@ def test_widen_float_to_double_and_feed_skip(spark, tmp_path):
     assert t2.read_where_eq("u", 77).count() == 1
     kb, kr, _ = t2.pruned_file_count_eq("u", 10**9)
     assert kb < kr
+
+
+def test_copied_files_is_a_per_commit_record(spark, tmp_path):
+    """copy_into's loaded-file record describes its own commit only: a
+    later metadata commit and a later MoR commit do not inherit it, and
+    the idempotency check still finds it in the history."""
+    t = VersionedTable.create(
+        spark, str(tmp_path / "t"), _df(spark, [(1, "a", 1), (2, "b", 2)])
+    )
+    land = tmp_path / "landing"
+    _df(spark, [(5, "e", 5)]).coalesce(1).write.parquet(str(land))
+    v_copy = t.copy_into(str(land))
+    assert t._read_pointer(v_copy).get("copied_files")
+    v_props = t.set_properties({"owner": "etl"})
+    v_mor = t.delete("k = 1", mode="mor")
+    for v in (v_props, v_mor):
+        assert "copied_files" not in t._read_pointer(v)
+    # a second COPY INTO of the same dir is still a no-op
+    assert t.copy_into(str(land)) == v_mor
+    assert sorted(r["k"] for r in t.read().collect()) == [2, 5]
+
+
+def _merge_src(spark):
+    return _df(spark, [(1, "m", 5), (7, "i", 5)])
+
+
+_REBASING_OPS = {
+    "append": lambda t, spark: t.append(_df(spark, [(9, "new", 9)])),
+    "delete_cow": lambda t, spark: t.delete("k = 1"),
+    "delete_mor": lambda t, spark: t.delete("k = 1", mode="mor"),
+    "update_cow": lambda t, spark: t.update("k = 1", {"v": "'u'"}),
+    "update_mor": lambda t, spark: t.update(
+        "k = 1", {"v": "'u'"}, mode="mor"
+    ),
+    "overwrite_where": lambda t, spark: t.overwrite_where(
+        _df(spark, [(1, "r", 5)]), "k = 1"
+    ),
+    "merge_cow": lambda t, spark: t.merge(
+        _merge_src(spark),
+        ["k"],
+        when_matched_update={"v": "s.v"},
+        when_not_matched_insert="*",
+    ),
+    "merge_mor": lambda t, spark: t.merge(
+        _merge_src(spark),
+        ["k"],
+        when_matched_update={"v": "s.v"},
+        when_not_matched_insert="*",
+        mode="mor",
+    ),
+    "optimize": lambda t, spark: t.optimize(),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_REBASING_OPS))
+def test_rebasing_commit_gives_up_after_ten_lost_cas(spark, tmp_path, op):
+    """Every op that rebases on a lost race stops after 10 CAS attempts
+    with ConcurrentWriteError and leaves the table exactly as it was."""
+    t = VersionedTable.create(
+        spark, str(tmp_path / "t"), _df(spark, [(1, "a", 1), (2, "b", 2)])
+    )
+    t.append(_df(spark, [(3, "c", 3)]))  # a second file to compact
+    head = t.head_version()
+    before = sorted(map(tuple, t.read().collect()))
+    attempts = []
+
+    def lose(manifest, version):
+        attempts.append(version)
+        return False
+
+    t._try_commit = lose
+    with pytest.raises(ConcurrentWriteError, match="lost 10 CAS races"):
+        _REBASING_OPS[op](t, spark)
+    del t._try_commit
+    assert len(attempts) == 10
+    assert t.head_version() == head
+    assert sorted(map(tuple, t.read().collect())) == before

@@ -67,9 +67,9 @@ def test_first_use_ops_turn_their_flag_on(spark, tmp_path):
 
 
 def test_features_survive_later_dml(spark, tmp_path):
-    """`_carry_mapping` carries the set through flat-dict commits
-    (append/delete/update/merge/optimize) — a rename's gate must not
-    vanish under the next append."""
+    """The carry rule (`_child`) carries the set through every later
+    commit (append/delete/update/merge/optimize) — a rename's gate must
+    not vanish under the next append."""
     t = VersionedTable.create(
         spark, str(tmp_path / "t"), _df(spark, [(i, "x") for i in range(4)])
     )

@@ -6,8 +6,8 @@
 - the light-committer write path produces no ``_SUCCESS`` markers in
   engine-owned directories while the manifest still lists every part
   file (the explicit-listing discovery the options rely on);
-- ``_dir_num_rows`` counts real rows from footers and treats a missing
-  dir as empty.
+- ``_dir_has_rows`` reads emptiness from footers, stops at the first
+  non-empty one, and treats a missing dir as empty.
 """
 
 from __future__ import annotations
@@ -91,8 +91,44 @@ def test_dir_num_rows_counts_footers_and_missing_dir_is_empty(
 ):
     t = VersionedTable.create(spark, str(tmp_path / "t"), _frame(spark, 7))
     ddir = os.path.dirname(t._read_manifest(0)["files"][0])
-    assert t._dir_num_rows(ddir) == 7
-    assert t._dir_num_rows(str(tmp_path / "nope")) == 0
+    assert t._dir_has_rows(ddir)
+    assert not t._dir_has_rows(str(tmp_path / "nope"))
+
+
+@pytest.mark.parametrize("local", [True, False], ids=["local", "pyarrow_fs"])
+def test_dir_has_rows_opens_one_footer_of_many(
+    spark, tmp_path, monkeypatch, local
+):
+    """The emptiness check stops at the first non-empty footer: a dir
+    of 1,000 non-empty part files costs one footer read, on the local
+    branch and on the pyarrow.fs branch remote tables take. An
+    all-empty dir still reads as empty."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    full, empty = tmp_path / "full", tmp_path / "empty"
+    full.mkdir()
+    empty.mkdir()
+    one = pa.table({"id": [1]})
+    for i in range(1000):
+        pq.write_table(one, str(full / f"part-{i:05d}.parquet"))
+    for i in range(3):
+        pq.write_table(one.slice(0, 0), str(empty / f"part-{i:05d}.parquet"))
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    t._local = local
+    prefix = "" if local else "file://"
+    opened = []
+    real = pq.ParquetFile
+
+    def counting(source, *args, **kwargs):
+        opened.append(source)
+        return real(source, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    assert t._dir_has_rows(f"{prefix}{full}")
+    assert len(opened) == 1
+    assert not t._dir_has_rows(f"{prefix}{empty}")
+    assert len(opened) == 4
 
 
 def test_write_first_empty_rewrite_leaves_no_stray_data_dir(
