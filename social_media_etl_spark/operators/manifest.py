@@ -64,6 +64,7 @@ import json
 import os
 import uuid
 from functools import partial
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -148,6 +149,13 @@ class UnsupportedTableFeatureError(RuntimeError):
     changes what a correct READ means (DVs hide rows, aliases remap
     columns, widened types re-type footers), so a reader that ignored
     an unknown flag would return wrong rows, not degraded ones."""
+
+
+def _file_key(uri: str) -> str:
+    """The plain path the manifest records for a scan-side file URI
+    (``input_file_name()``, a vector's ``_metadata.file_path``):
+    scheme and authority stripped, percent-escapes decoded."""
+    return unquote(urlparse(uri).path)
 
 
 def _bloom_hashes(value, bits: int, k: int) -> list | None:
@@ -815,23 +823,60 @@ class VersionedTable:
         }
 
     @staticmethod
-    def _strict_cast_sql(expr_sql: str, type_sql: str, msg_prefix: str) -> str:
-        """SQL text of the engine-wide strict-cast contract: evaluate
-        ``expr_sql``, cast to ``type_sql``, and raise in-plan (never a
-        silent NULL) when a non-NULL value does not fit —
-        ``msg_prefix`` is the error text up to (and including) the
-        opening quote of the offending value. One ``F.expr`` parse per
-        column (r16) instead of ~12 py4j Column-DSL round trips; the
+    def _strict_caster(types: dict, exprs: dict, what: str):
+        """``name -> SQL text``: ``exprs[name]`` evaluated and cast to
+        ``types[name]`` under the engine-wide strict-cast contract — a
+        non-NULL value that does not fit raises in-plan
+        ("VersionedTable.<what> column '<name>' does not fit type <t>
+        for value '<v>'"), never a silent NULL (ADVICE r8: the session
+        pins ANSI off, under which a bare ``.cast`` nulls like
+        ``try_cast``). SQL text so each column costs one ``F.expr``
+        parse (r16) instead of ~12 py4j Column-DSL round trips; the
         resolved expression tree is identical."""
-        p = msg_prefix.replace("'", "''")
-        e = f"({expr_sql})"
-        return (
-            f"CASE WHEN {e} IS NOT NULL "
-            f"AND CAST({e} AS {type_sql}) IS NULL "
-            f"THEN CAST(raise_error(concat('{p}', "
-            f"CAST({e} AS STRING), '''')) AS {type_sql}) "
-            f"ELSE CAST({e} AS {type_sql}) END"
+
+        def cast(name):
+            t = types[name].simpleString()
+            p = (
+                f"VersionedTable.{what} column '{name}' does not fit "
+                f"type {t} for value '"
+            ).replace("'", "''")
+            e = f"({exprs[name]})"
+            return (
+                f"CASE WHEN {e} IS NOT NULL "
+                f"AND CAST({e} AS {t}) IS NULL "
+                f"THEN CAST(raise_error(concat('{p}', "
+                f"CAST({e} AS STRING), '''')) AS {t}) "
+                f"ELSE CAST({e} AS {t}) END"
+            )
+
+        return cast
+
+    @staticmethod
+    def _cdc_images(
+        pre: DataFrame, post: DataFrame | None = None
+    ) -> DataFrame:
+        """A commit's CDC rows for changed rows: their pre-images tagged
+        ``delete`` — or, given the post-images, ``update_preimage`` /
+        ``update_postimage`` pairs (a delete is the update without a
+        post-image)."""
+        if post is None:
+            return pre.select("*", F.lit("delete").alias("_change_type"))
+        return pre.select(
+            "*", F.lit("update_preimage").alias("_change_type")
+        ).unionByName(
+            post.select("*", F.lit("update_postimage").alias("_change_type"))
         )
+
+    @staticmethod
+    def _check_mode(op: str, mode: str) -> bool:
+        """Validate a row-level DML ``mode``; True for merge-on-read."""
+        if mode not in ("cow", "mor"):
+            raise ValueError(
+                f"VersionedTable.{op}: unknown mode {mode!r} — expected "
+                "'cow' (copy-on-write rewrite) or 'mor' (merge-on-read: "
+                "deletion vector + new-rows-only files)"
+            )
+        return mode == "mor"
 
     @staticmethod
     def _bump_identity(
@@ -1818,7 +1863,7 @@ class VersionedTable:
         metadata (the Iceberg partition-tuple-per-file pattern).
 
         ``drop_if_empty`` (r16, guide §1.2 — same shape as
-        :meth:`_write_cdc_if_any`): the rewrite paths (COW merge /
+        :meth:`_write_if_any`): the rewrite paths (COW merge /
         delete) used to gate this call on a ``limit(1).count()``
         probe, which executed the whole rewrite plan once for the
         probe and AGAIN for the write. With ``drop_if_empty=True``
@@ -1916,56 +1961,51 @@ class VersionedTable:
             return []
         return sorted(files)
 
-    def _write_cdc(self, df: DataFrame, version_hint: int) -> str:
-        """Write one commit's row-level CDC records (rows already
-        tagged ``_change_type``) as an immutable parquet dir — the
-        Delta ``_change_data`` pattern. Written BEFORE the CAS; a lost
-        race leaves an orphan dir that vacuum sweeps age-guarded.
-        Bounded by the commit's own changed rows, distributed write."""
-        cdir = f"{self.path}/cdc/b{version_hint:08d}-{uuid.uuid4().hex[:8]}"
-        apply_light_committer(df.write.mode("error"), self.spark).parquet(cdir)
-        return cdir
-
-    def _write_cdc_if_any(self, df: DataFrame, version_hint: int) -> str | None:
-        """Write one commit's CDC rows; return the dir, or None (dir
-        removed) when the commit changed zero rows. Replaces the old
+    def _write_if_any(
+        self, kind: str, df: DataFrame, version_hint: int
+    ) -> str | None:
+        """Stage one commit's side rows as an immutable parquet dir
+        under ``<table>/<kind>/``: its row-level CDC records
+        (``kind='cdc'``, rows tagged ``_change_type`` — the Delta
+        ``_change_data`` pattern) or its deletion vector (``'dv'``,
+        the matched rows' ``(file, position)`` keys). Distributed
+        write, bounded by the commit's own changed rows, written
+        BEFORE the CAS; a lost race leaves an orphan dir that vacuum
+        sweeps age-guarded. Returns the dir, or None (dir removed)
+        when the commit changed zero rows. Replaces the old
         probe-then-write shape (r15 optimization, guide §1.2): the
-        ``limit(1).count()`` emptiness guard executed the entire CDC
+        ``limit(1).count()`` emptiness guard executed the whole
         classification plan once and the write executed it AGAIN —
-        the guard now reads the WRITTEN footers' row counts (O(files)
-        driver metadata on local tables) after a single execution.
-        Zero-change commits still record nothing, exactly as before
-        (the feed's change-free contract is by ABSENCE of a cdc dir,
-        so the empty dir is deleted, never recorded)."""
-        cdir = self._write_cdc(df, version_hint)
-        if self._dir_has_rows(cdir):
-            return cdir
-        self._rm_dir(cdir)
+        the guard now reads the WRITTEN footers (:meth:`_dir_has_rows`)
+        after a single execution. Zero-change commits still record
+        nothing (the feed's change-free contract is by ABSENCE of a
+        cdc dir, and a no-match MoR DML commits nothing at all), so
+        the empty dir is deleted, never recorded."""
+        d = f"{self.path}/{kind}/b{version_hint:08d}-{uuid.uuid4().hex[:8]}"
+        apply_light_committer(df.write.mode("error"), self.spark).parquet(d)
+        if self._dir_has_rows(d):
+            return d
+        self._rm_dir(d)
         return None
 
-    def _dir_has_rows(self, d: str) -> bool:
-        """Whether a just-written parquet dir holds any row — footer
-        metadata ONLY, on every scheme (r16: the remote branch reads
-        footers through pyarrow.fs like :meth:`_copy_files_distributed`
-        does, instead of running a ``limit(1).count()`` Spark job per
-        commit), and it stops at the FIRST non-empty footer, so a
-        non-empty dir costs one footer read however many part files it
-        holds. A missing/empty directory has no rows (an all-empty
-        write legitimately produces no part files); any OTHER failure
-        propagates — the callers DELETE the directory when it is
-        empty, so swallowing a transient read error here would
-        silently discard a non-empty CDC feed or deletion vector
-        (ADVICE r15)."""
+    def _footer_rows(self, d: str):
+        """Row count of each part file of a just-written parquet dir,
+        lazily, from the footers ONLY — on every scheme (the remote
+        branch reads footers through pyarrow.fs like
+        :meth:`_copy_files_distributed` does), never a Spark job. A
+        missing/empty directory yields nothing (an all-empty write
+        legitimately produces no part files); any OTHER failure
+        propagates."""
         import pyarrow.parquet as pq
 
         if self._local:
             for root, _dirs, names in os.walk(d):
                 for n in names:
-                    if (n.endswith(".parquet") or n.startswith("part-")) and (
-                        pq.ParquetFile(os.path.join(root, n)).metadata.num_rows
-                    ):
-                        return True
-            return False
+                    if n.endswith(".parquet") or n.startswith("part-"):
+                        yield pq.ParquetFile(
+                            os.path.join(root, n)
+                        ).metadata.num_rows
+            return
         from pyarrow import fs as pafs
 
         fsys, root = pafs.FileSystem.from_uri(d)
@@ -1976,9 +2016,17 @@ class VersionedTable:
                 name.endswith(".parquet") or name.startswith("part-")
             ):
                 with fsys.open_input_file(info.path) as f:
-                    if pq.ParquetFile(f).metadata.num_rows:
-                        return True
-        return False
+                    yield pq.ParquetFile(f).metadata.num_rows
+
+    def _dir_has_rows(self, d: str) -> bool:
+        """Whether a just-written parquet dir holds any row (r16: instead
+        of a ``limit(1).count()`` Spark job per commit). It stops at the
+        FIRST non-empty footer, so a non-empty dir costs one footer
+        read however many part files it holds. Read errors propagate
+        — the callers DELETE the directory when it is empty, so
+        swallowing a transient read error here would silently discard
+        a non-empty CDC feed or deletion vector (ADVICE r15)."""
+        return any(self._footer_rows(d))
 
     def _rm_dir(self, d: str) -> None:
         """Remove a staged directory this commit decided not to record."""
@@ -1993,10 +2041,8 @@ class VersionedTable:
         """The data files the given deletion-vector dirs name (their
         distinct ``(file, position)`` file keys as plain paths) — one
         bounded collect, O(vectored files)."""
-        from urllib.parse import unquote, urlparse
-
         return {
-            unquote(urlparse(r[0]).path)
+            _file_key(r[0])
             for r in self.spark.read.parquet(*dv_dirs)
             .select(self._DV_FILE)
             .distinct()
@@ -2014,8 +2060,6 @@ class VersionedTable:
         partition tuple), so pruning can skip on any prefix/conjunct
         while NULL positions are always kept. Pure path arithmetic,
         O(files) driver-side metadata."""
-        from urllib.parse import unquote
-
         n = len(cls._pb_cols(partition_by)) if partition_by else 1
         out = {}
         for f in files:
@@ -2876,7 +2920,7 @@ class VersionedTable:
             # same non-empty guard as merge/delete/update: a source
             # whose every row lost (or tied) changes nothing; the
             # guard reads the written footers (one plan execution)
-            cdc_dir = self._write_cdc_if_any(cdc, v)
+            cdc_dir = self._write_if_any("cdc", cdc, v)
         # a full rewrite lands every logical column in every file,
         # collapsing any earlier mixed layout back to uniform
         m = self._child(base, parent, "upsert", mixed=False, cdc=cdc_dir)
@@ -2996,8 +3040,6 @@ class VersionedTable:
         with NULL-fill, so additive evolution mid-range is fine; the
         plan is O(commits in range) unions of O(changed files) scans —
         consumers poll bounded ranges, exactly like read_changes."""
-        from urllib.parse import unquote, urlparse
-
         head = self.head_version()
         to_v = head if to_version is None else to_version
         if from_version > to_v:
@@ -3065,10 +3107,7 @@ class VersionedTable:
                 if not new_dvs:
                     continue
                 dv = self.spark.read.parquet(*new_dvs)
-                touched = {
-                    unquote(urlparse(r[0]).path)
-                    for r in dv.select(self._DV_FILE).distinct().collect()
-                }
+                touched = self._dv_files(*new_dvs)
                 m_v = self._resolve(ptr)
                 files = [f for f in m_v["files"] if f in touched]
                 rows = self._read_files(
@@ -3336,7 +3375,7 @@ class VersionedTable:
                     allowMissingColumns=True,
                 )
             )
-            cdc_dir = self._write_cdc_if_any(cdc, parent + 1)
+            cdc_dir = self._write_if_any("cdc", cdc, parent + 1)
         m = self._child(
             base,
             parent,
@@ -3452,7 +3491,7 @@ class VersionedTable:
                     )
                 )
             # kept files whose rows a post-`version` vector hid: the
-            # restore un-hides them. _delete_mor's find-scan is
+            # restore un-hides them. Every MoR scan is
             # DV-applied, so a newer vector never names an
             # already-hidden position — every key in new_dvs was
             # visible at `version`.
@@ -3485,7 +3524,7 @@ class VersionedTable:
                     # BY NAME across schema evolution in the range;
                     # the feed projects to the reader's end schema
                     cdc = cdc.unionByName(fdf, allowMissingColumns=True)
-                cdc_dir = self._write_cdc_if_any(cdc, v)
+                cdc_dir = self._write_if_any("cdc", cdc, v)
         # the TARGET's table state is the restored snapshot; the txn
         # set is live table state, not snapshot content, so it carries
         # from the HEAD
@@ -4654,8 +4693,6 @@ class VersionedTable:
           (Spark computes the bucket hash itself at write time)."""
         import os
         import shutil
-        from urllib.parse import urlparse
-
         if mode not in ("link", "ctas"):
             raise ValueError(
                 f"VersionedTable.register_bucketed: unknown mode {mode!r}"
@@ -4823,17 +4860,15 @@ class VersionedTable:
             )
         )
 
-    def _touched_files(
+    def _candidate_files(
         self,
         base: dict,
         predicate: str,
         prune: list[tuple] | None,
         verify_prune: bool = False,
     ) -> list[str]:
-        """The find-files-to-rewrite scan shared by :meth:`delete` and
-        :meth:`update`: distinct source files of predicate-matching
-        rows (bounded collect, ≤ one row per data file). ``prune`` is
-        an optional list of ``(col, lo, hi)`` range conjuncts that the
+        """The files a predicate DML has to scan. ``prune`` is an
+        optional list of ``(col, lo, hi)`` range conjuncts that the
         predicate IMPLIES (the Delta partition-predicate contract):
         manifest stats/partition metadata then narrow the scan to the
         overlapping files BEFORE any footer is opened, so a point
@@ -4846,28 +4881,41 @@ class VersionedTable:
         hit — full-scan cost, so it is a debugging/audit knob, not the
         production path (ADVICE r8: the contract is now explicit and
         checkable at call sites)."""
-        from urllib.parse import unquote, urlparse
-
-        candidates = (
-            self._kept_files_all(base, prune) if prune else base["files"]
-        )
-        if prune and verify_prune:
+        if not prune:
+            return base["files"]
+        candidates = self._kept_files_all(base, prune)
+        if verify_prune:
             cand = set(candidates)
             pruned_out = [f for f in base["files"] if f not in cand]
-            if pruned_out:
-                stray = (
-                    self._read_files(base, pruned_out)
-                    .filter(F.expr(predicate))
-                    .limit(1)
-                    .count()
+            if pruned_out and (
+                self._read_files(base, pruned_out)
+                .filter(F.expr(predicate))
+                .limit(1)
+                .count()
+            ):
+                raise ValueError(
+                    "VersionedTable: prune hint does not cover the "
+                    f"predicate — rows matching {predicate!r} exist "
+                    "in files the hint pruned out; fix the bounds "
+                    "(they must be IMPLIED by the predicate)"
                 )
-                if stray:
-                    raise ValueError(
-                        "VersionedTable: prune hint does not cover the "
-                        f"predicate — rows matching {predicate!r} exist "
-                        "in files the hint pruned out; fix the bounds "
-                        "(they must be IMPLIED by the predicate)"
-                    )
+        return candidates
+
+    def _touched_files(
+        self,
+        base: dict,
+        predicate: str,
+        prune: list[tuple] | None,
+        verify_prune: bool = False,
+    ) -> list[str]:
+        """The find-files-to-rewrite scan of copy-on-write DML
+        (:meth:`delete`, :meth:`update`, :meth:`overwrite_where`):
+        distinct source files of predicate-matching rows among the
+        :meth:`_candidate_files` (bounded collect, ≤ one row per data
+        file)."""
+        candidates = self._candidate_files(
+            base, predicate, prune, verify_prune
+        )
         if not candidates:
             return []
         # apply_dvs=False: input_file_name() is only defined over a
@@ -4882,8 +4930,167 @@ class VersionedTable:
             .distinct()
             .collect()
         )
-        touched = {unquote(urlparse(r["__f"]).path) for r in matched}
+        touched = {_file_key(r["__f"]) for r in matched}
         return [f for f in base["files"] if f in touched]
+
+    def _rewrite_rows(
+        self,
+        op: str,
+        predicate: str,
+        assignments: dict[str, str] | None,
+        txn: str | None,
+        prune: list[tuple] | None,
+        verify_prune: bool,
+        mode: str,
+    ) -> int:
+        """The ONE row-level DML path: :meth:`update`, and
+        :meth:`delete` as the update without a post-image
+        (``assignments`` None). The rows where ``predicate`` is TRUE
+        are the commit's pre-images; the post-images assign each
+        ``assignments`` column its strict-cast expression.
+
+        Copy-on-write removes the files holding a match
+        (:meth:`_touched_files`) and writes them back with the matches
+        dropped or assigned. Merge-on-read (Delta deletion vectors,
+        VERDICT r8 #5 / r11 #3) rewrites ZERO data files: the matches'
+        (file, row-position) keys become a DELETION VECTOR hiding the
+        pre-images — distributed write, never through the driver —
+        and only the post-images land in new files, sized from the
+        vector's footer row count (:meth:`_mor_shuffle`). Its scan is
+        DV-applied, so a row an earlier vector already hid is neither
+        re-deleted nor re-updated (its post-image would resurrect it).
+        Either way an empty change set commits nothing and returns the
+        current version. CDC on a ``change_data_feed`` table records
+        the pre-images as deletes or pre/post pairs; a MoR delete
+        records none (:meth:`read_change_feed` reads its vector).
+
+        The rebase (:meth:`_rebase_over_disjoint`) guards the rewritten
+        files, or the vectored ones: their keys stay valid iff no
+        winner rewrote or vectored one of those files and no winner
+        added a row the predicate covers."""
+        mor = self._check_mode(op, mode)
+        parent = self.head_version()
+        ptr = self._read_pointer(parent)
+        base = self._resolve(ptr)
+        hit_sql = f"coalesce(({predicate}), false)"
+        hit = F.expr(hit_sql)
+        post_cols = None
+        if assignments is not None:
+            schema = self._manifest_schema(base)
+            if schema is None:
+                raise ValueError(
+                    "VersionedTable.update: legacy manifest without "
+                    "schema_json cannot type-check assignments"
+                )
+            types = {f.name: f.dataType for f in schema.fields}
+            unknown = set(assignments) - set(types)
+            if unknown:
+                raise ValueError(
+                    f"VersionedTable.update: assignment to unknown "
+                    f"column(s) {sorted(unknown)}; table columns are "
+                    f"{sorted(types)}"
+                )
+            self._refuse_generated_assignment(
+                base, set(assignments), "update"
+            )
+            cast = self._strict_caster(
+                types, assignments, "update: assignment to"
+            )
+            # SQL text: one parse per column, no Column-DSL round trips
+            post_cols = [
+                F.expr(
+                    f"CASE WHEN {hit_sql} THEN {cast(f.name)} "
+                    f"ELSE `{f.name}` END AS `{f.name}`"
+                    if f.name in assignments
+                    else f"`{f.name}`"
+                )
+                for f in schema.fields
+            ]
+        v = parent + 1
+        pb, bb = base.get("partition_by"), base.get("bucket_by")
+        dv_dir = new_rows = None
+        if mor:
+            candidates = self._candidate_files(
+                base, predicate, prune, verify_prune
+            )
+            if not candidates:
+                return parent
+            # DV-applied scan: rows an earlier vector hid never match
+            rows = self._read_files(
+                base, candidates, with_pos=True
+            ).filter(hit)
+            dv_dir = self._write_if_any(
+                "dv", rows.select(self._DV_FILE, self._DV_POS), v
+            )
+            if dv_dir is None:
+                return parent
+            removed, guarded = (), self._dv_files(dv_dir)
+            rows = rows.drop(self._DV_FILE, self._DV_POS)
+            if post_cols is not None:
+                # post-image files sized from the vector's footer count
+                new_rows = self._mor_shuffle(
+                    rows.select(*post_cols),
+                    pb,
+                    bb,
+                    sum(self._footer_rows(dv_dir)),
+                )
+        else:
+            removed = self._touched_files(
+                base, predicate, prune, verify_prune
+            )
+            if not removed:
+                return parent
+            guarded = set(removed)
+            scan = self._read_files(base, removed)
+            rows = scan.filter(hit)
+            new_rows = (
+                scan.filter(~hit)
+                if post_cols is None
+                else scan.select(*post_cols)
+            )
+        cdc_dir = None
+        if base.get("cdf") and not (mor and post_cols is None):
+            # _touched_files over-approximates (its find-scan skips
+            # DVs) while this pre-image read is DV-applied — if every
+            # match was already vector-hidden the frame is empty and
+            # nothing is recorded (ADVICE r10)
+            cdc_dir = self._write_if_any(
+                "cdc",
+                self._cdc_images(
+                    rows,
+                    None if post_cols is None else rows.select(*post_cols),
+                ),
+                v,
+            )
+        # write-first (r16, drop_if_empty): an all-rows-deleted
+        # rewrite commits an empty file set
+        new_files = (
+            []
+            if new_rows is None
+            else self._write_data(new_rows, v, pb, bb, drop_if_empty=True)
+        )
+        # a delete keeps a subset of already-valid rows: no CHECK
+        # pass; assignments can push rows outside a CHECK constraint
+        return self._commit(
+            op,
+            (parent, ptr, base),
+            removed,
+            new_files,
+            partial(
+                self._rebase_over_disjoint,
+                f"{op}(mor)" if mor else op,
+                guarded,
+                self._stale_if_predicate_match(predicate),
+            ),
+            lambda _head: {
+                "predicate": predicate,
+                "mode": "mor" if mor else None,
+                "cdc": cdc_dir,
+            },
+            txn,
+            dv_dir=dv_dir,
+            check=post_cols is not None,
+        )
 
     def delete(
         self,
@@ -4932,70 +5139,47 @@ class VersionedTable:
         Returns the new version, or the CURRENT version unchanged if
         no row matched (no empty commits). ``prune``: optional
         predicate-implied range conjuncts that let manifest metadata
-        narrow the find-scan itself (see :meth:`_touched_files`)."""
-        if mode not in ("cow", "mor"):
-            raise ValueError(
-                f"VersionedTable.delete: unknown mode {mode!r} — "
-                "expected 'cow' (copy-on-write rewrite) or 'mor' "
-                "(merge-on-read deletion vector)"
-            )
-        if mode == "mor":
-            return self._delete_mor(predicate, txn, prune, verify_prune)
-        parent = self.head_version()
-        ptr = self._read_pointer(parent)
-        base = self._resolve(ptr)
-        touched_files = self._touched_files(
-            base, predicate, prune, verify_prune
+        narrow the find-scan itself (see :meth:`_candidate_files`)."""
+        return self._rewrite_rows(
+            "delete", predicate, None, txn, prune, verify_prune, mode
         )
-        if not touched_files:
-            return parent
-        keep_rows = ~F.coalesce(F.expr(predicate), F.lit(False))
-        remaining = self._read_files(base, touched_files).filter(keep_rows)
-        cdc_dir = None
-        if base.get("cdf"):
-            # change-data-feed table: record the removed rows as CDC
-            # files so read_change_feed covers this COW commit (the
-            # Delta enableChangeDataFeed contract)
-            removed = (
-                self._read_files(base, touched_files)
-                .filter(F.coalesce(F.expr(predicate), F.lit(False)))
-                .select("*", F.lit("delete").alias("_change_type"))
-            )
-            # _touched_files over-approximates (its find-scan skips
-            # DVs) while this preimage read is DV-applied — if every
-            # predicate match was already vector-hidden, the frame is
-            # empty and an empty parquet dir is unreadable; skip
-            # recording like merge does and the feed treats the
-            # commit as change-free (ADVICE r10). Write-first (r16):
-            # the old limit(1) probe executed the preimage scan once
-            # and the write executed it again.
-            cdc_dir = self._write_cdc_if_any(removed, parent + 1)
-        # bounded action over the touched files only: an all-rows-
-        # deleted rewrite must commit an empty file set. Write-first
-        # (r16, drop_if_empty): the old limit(1) probe executed the
-        # rewrite plan once and the write executed it again.
-        new_files = self._write_data(
-            remaining,
-            parent + 1,
-            base.get("partition_by"),
-            base.get("bucket_by"),
-            drop_if_empty=True,
-        )
-        # a delete keeps a subset of already-valid rows: no CHECK pass
-        return self._commit(
-            "delete",
-            (parent, ptr, base),
-            touched_files,
-            new_files,
-            partial(
-                self._rebase_over_disjoint,
-                "delete",
-                set(touched_files),
-                self._stale_if_predicate_match(predicate),
-            ),
-            lambda _head: {"predicate": predicate, "cdc": cdc_dir},
-            txn,
-            check=False,
+
+    def update(
+        self,
+        predicate: str,
+        assignments: dict[str, str],
+        txn: str | None = None,
+        prune: list[tuple] | None = None,
+        verify_prune: bool = False,
+        mode: str = "cow",
+    ) -> int:
+        """Row-level UPDATE as COPY-ON-WRITE — the DML sibling of
+        :meth:`delete` (Delta UPDATE pattern): for every row where
+        ``predicate`` is TRUE, each ``assignments`` column is replaced
+        by its SQL expression (evaluated against the row's PRE-update
+        values, standard UPDATE semantics); FALSE/NULL rows are kept
+        unchanged. Only files containing matching rows are rewritten —
+        untouched files carry over byte-identical. Every assigned
+        expression is cast to the column's existing type (an UPDATE
+        can never drift the table schema) — STRICTLY: an assignment
+        value the cast cannot represent raises in-plan rather than
+        silently writing NULL into rewritten rows (ADVICE r8; the
+        session pins ANSI off, under which a bare ``.cast`` nulls like
+        ``try_cast``, so the guard is the same in-plan raise
+        ``cast_columns(strict=True)`` uses). Commit is op ``update``;
+        like :meth:`delete` it COMMUTES with concurrent appends and
+        DISJOINT rewrites whose rows provably miss the predicate
+        (r11, file-granularity conflict rules) and raises on any
+        other race. ``read_changes`` refuses ranges
+        crossing it. Returns the new version, or the current version
+        unchanged if no row matched. ``prune``: optional
+        predicate-implied range conjuncts that let manifest metadata
+        narrow the find-scan itself (see :meth:`_candidate_files`).
+        ``mode='mor'`` takes the merge-on-read path instead: deletion
+        vector over the pre-images, post-images as new files, zero
+        data files rewritten."""
+        return self._rewrite_rows(
+            "update", predicate, assignments, txn, prune, verify_prune, mode
         )
 
     def overwrite_where(
@@ -5058,16 +5242,10 @@ class VersionedTable:
                 order += [c for c in df.columns if c not in order]
                 df = df.select(*order)
         sch = self._check_schema(df, ptr)
+        hit = F.coalesce(F.expr(predicate), F.lit(False))
         # conformance probe (bounded: first violation only) — BEFORE
         # any file is written
-        stray = (
-            df.filter(
-                ~F.coalesce(F.expr(predicate), F.lit(False))
-            )
-            .limit(1)
-            .count()
-        )
-        if stray:
+        if df.filter(~hit).limit(1).count():
             raise ValueError(
                 "VersionedTable.overwrite_where: replacement rows "
                 f"must satisfy the predicate ({predicate!r}) — a row "
@@ -5082,32 +5260,20 @@ class VersionedTable:
         # the common touched-files path skips the extra job (r16)
         if not touched_files and not df.limit(1).count():
             return parent
-        keep_rows = ~F.coalesce(F.expr(predicate), F.lit(False))
-        remaining = (
-            self._read_files(base, touched_files).filter(keep_rows)
-            if touched_files
-            else None
-        )
+        scan = self._read_files(base, touched_files) if touched_files else None
         combined = (
-            remaining.unionByName(df, allowMissingColumns=True)
-            if remaining is not None
-            else df
+            df
+            if scan is None
+            else scan.filter(~hit).unionByName(df, allowMissingColumns=True)
         )
         cdc_dir = None
         if base.get("cdf"):
-            removed = (
-                self._read_files(base, touched_files)
-                .filter(F.coalesce(F.expr(predicate), F.lit(False)))
-                .select("*", F.lit("delete").alias("_change_type"))
-                if touched_files
-                else None
-            )
-            cdc = df.select(
-                "*", F.lit("insert").alias("_change_type")
-            )
-            if removed is not None:
-                cdc = removed.unionByName(cdc, allowMissingColumns=True)
-            cdc_dir = self._write_cdc_if_any(cdc, parent + 1)
+            cdc = df.select("*", F.lit("insert").alias("_change_type"))
+            if scan is not None:
+                cdc = self._cdc_images(scan.filter(hit)).unionByName(
+                    cdc, allowMissingColumns=True
+                )
+            cdc_dir = self._write_if_any("cdc", cdc, parent + 1)
         # write-first (r16, drop_if_empty): the old limit(1) probe
         # executed the keep-rows scan + replacement union once for the
         # gate and again for the write
@@ -5272,78 +5438,6 @@ class VersionedTable:
 
         return check
 
-    def _delete_mor(
-        self,
-        predicate: str,
-        txn: str | None,
-        prune: list[tuple] | None,
-        verify_prune: bool,
-    ) -> int:
-        """Merge-on-read DELETE (Delta deletion vectors, VERDICT r8
-        #5): write the matching rows' (file, row-position) keys as a
-        parquet DELETION VECTOR — distributed write, never through the
-        driver — and commit a manifest that keeps every data file and
-        segment BY NAME, adding only the vector reference. Reads
-        anti-join the vectors out (:meth:`_read_files`); OPTIMIZE and
-        full rewrites compact them away. The find-scan is DV-applied,
-        so re-deleting an already-deleted slice is a no-op commit-wise
-        (returns the current version), and prune hints narrow it
-        exactly as in COW mode."""
-        parent = self.head_version()
-        ptr = self._read_pointer(parent)
-        base = self._resolve(ptr)
-        candidates = (
-            self._kept_files_all(base, prune) if prune else base["files"]
-        )
-        if prune and verify_prune:
-            cand = set(candidates)
-            pruned_out = [f for f in base["files"] if f not in cand]
-            if pruned_out:
-                stray = (
-                    self._read_files(base, pruned_out)
-                    .filter(F.expr(predicate))
-                    .limit(1)
-                    .count()
-                )
-                if stray:
-                    raise ValueError(
-                        "VersionedTable: prune hint does not cover the "
-                        f"predicate — rows matching {predicate!r} exist "
-                        "in files the hint pruned out; fix the bounds "
-                        "(they must be IMPLIED by the predicate)"
-                    )
-        if not candidates:
-            return parent
-        hits = (
-            self._read_files(base, candidates, with_pos=True)
-            .filter(F.coalesce(F.expr(predicate), F.lit(False)))
-            .select(self._DV_FILE, self._DV_POS)
-        )
-        # bounded probe before writing: no matches → no empty commit
-        if not hits.limit(1).count():
-            return parent
-        dv_dir = f"{self.path}/dv/b{parent + 1:08d}-{uuid.uuid4().hex[:8]}"
-        apply_light_committer(
-            hits.write.mode("error"), self.spark
-        ).parquet(dv_dir)
-        # the vector names (file, position) keys: they stay valid on a
-        # rebase iff no winner rewrote or vectored one of those files
-        return self._commit(
-            "delete",
-            (parent, ptr, base),
-            (),
-            [],
-            partial(
-                self._rebase_over_disjoint,
-                "delete(mor)",
-                self._dv_files(dv_dir),
-                self._stale_if_predicate_match(predicate),
-            ),
-            lambda _head: {"mode": "mor", "predicate": predicate},
-            txn,
-            dv_dir=dv_dir,
-        )
-
     #: target rows per MoR-written file — sizes new-rows-only commits
     #: explicitly instead of trusting AQE's coalescing heuristics
     #: (parallelismFirst etc. vary with session history; the 10×
@@ -5391,162 +5485,6 @@ class VersionedTable:
             )
         nparts = max(1, min(cap, -(-n_rows // rows_per_file)))
         return df.repartition(nparts)
-
-    def _update_mor(
-        self,
-        predicate: str,
-        assignments: dict[str, str],
-        txn: str | None,
-        prune: list[tuple] | None,
-        verify_prune: bool,
-    ) -> int:
-        """Merge-on-read UPDATE (VERDICT r11 #3 — extending the
-        deletion-vector machinery beyond DELETE, as Delta's DVs serve
-        update too): the matching rows' (file, row-position) keys
-        become a DELETION VECTOR hiding their PRE-update versions, and
-        their POST-update images land in new files — ZERO existing
-        data files are rewritten. At 100 TB a 0.1%-selectivity update
-        costs O(matched rows) written, not O(touched files) rewritten;
-        OPTIMIZE folds the vectors away exactly as for MoR delete.
-        Reads see one version of every row (the vector hides the old
-        one); time travel below the commit still reads the originals.
-        CDC on a ``change_data_feed`` table records the same
-        pre/postimage pairs as the COW form. Conflict rules are the
-        MoR-delete rules plus the update staleness check: a winner
-        that rewrote/vectored a vectored file, or added rows the
-        predicate covers, raises."""
-        parent = self.head_version()
-        ptr = self._read_pointer(parent)
-        base = self._resolve(ptr)
-        schema = self._manifest_schema(base)
-        if schema is None:
-            raise ValueError(
-                "VersionedTable.update: legacy manifest without "
-                "schema_json cannot type-check assignments"
-            )
-        types = {f.name: f.dataType for f in schema.fields}
-        unknown = set(assignments) - set(types)
-        if unknown:
-            raise ValueError(
-                f"VersionedTable.update: assignment to unknown "
-                f"column(s) {sorted(unknown)}; table columns are "
-                f"{sorted(types)}"
-            )
-        self._refuse_generated_assignment(
-            base, set(assignments), "update"
-        )
-        candidates = (
-            self._kept_files_all(base, prune) if prune else base["files"]
-        )
-        if prune and verify_prune:
-            cand = set(candidates)
-            pruned_out = [f for f in base["files"] if f not in cand]
-            if pruned_out:
-                stray = (
-                    self._read_files(base, pruned_out)
-                    .filter(F.expr(predicate))
-                    .limit(1)
-                    .count()
-                )
-                if stray:
-                    raise ValueError(
-                        "VersionedTable: prune hint does not cover the "
-                        f"predicate — rows matching {predicate!r} exist "
-                        "in files the hint pruned out; fix the bounds "
-                        "(they must be IMPLIED by the predicate)"
-                    )
-        if not candidates:
-            return parent
-        hit = F.coalesce(F.expr(predicate), F.lit(False))
-        # DV-applied scan: a row an earlier vector already hid must
-        # not be re-updated (its post-image would resurrect it)
-        rows = self._read_files(
-            base, candidates, with_pos=True
-        ).filter(hit)
-        if not rows.limit(1).count():
-            return parent
-
-        def _assigned(name):
-            # strict in-plan cast, the COW update contract (ADVICE r8)
-            t = types[name].simpleString()
-            return F.expr(
-                self._strict_cast_sql(
-                    assignments[name],
-                    t,
-                    "VersionedTable.update: assignment to column "
-                    f"'{name}' does not fit type {t} for value '",
-                )
-            )
-
-        post_cols = [
-            (
-                _assigned(f.name).alias(f.name)
-                if f.name in assignments
-                else F.col(f.name)
-            )
-            for f in schema.fields
-        ]
-        v = parent + 1
-        # the vector hides the pre-update versions…
-        dv_dir = f"{self.path}/dv/b{v:08d}-{uuid.uuid4().hex[:8]}"
-        apply_light_committer(
-            rows.select(self._DV_FILE, self._DV_POS).write.mode("error"),
-            self.spark,
-        ).parquet(dv_dir)
-        dv_touched = self._dv_files(dv_dir)
-        # …and the post-images land as NEW files (never a rewrite),
-        # explicitly sized from the vector's row count (a columnar
-        # count over the just-written DV parquet — footer metadata,
-        # no data pass) so slivers don't proliferate
-        n_changed = self.spark.read.parquet(dv_dir).count()
-        partition_by = base.get("partition_by")
-        new_files = self._write_data(
-            self._mor_shuffle(
-                rows.select(*post_cols),
-                partition_by,
-                base.get("bucket_by"),
-                n_changed,
-            ),
-            v,
-            partition_by,
-            base.get("bucket_by"),
-        )
-        cdc_dir = None
-        if base.get("cdf"):
-            pre = rows.select(*[F.col(f.name) for f in schema.fields])
-            post = rows.select(*post_cols)
-            cdc_dir = self._write_cdc(
-                pre.select(
-                    "*", F.lit("update_preimage").alias("_change_type")
-                ).unionByName(
-                    post.select(
-                        "*",
-                        F.lit("update_postimage").alias("_change_type"),
-                    )
-                ),
-                v,
-            )
-        # every parent segment carries BY NAME — the zero-rewrite
-        # contract at the metadata layer too
-        return self._commit(
-            "update",
-            (parent, ptr, base),
-            (),
-            new_files,
-            partial(
-                self._rebase_over_disjoint,
-                "update(mor)",
-                dv_touched,
-                self._stale_if_predicate_match(predicate),
-            ),
-            lambda _head: {
-                "mode": "mor",
-                "predicate": predicate,
-                "cdc": cdc_dir,
-            },
-            txn,
-            dv_dir=dv_dir,
-        )
 
     def merge(
         self,
@@ -5666,13 +5604,7 @@ class VersionedTable:
         point-keyed MERGE on a bloom-indexed key reads
         O(files-holding-keys). A NOT MATCHED BY SOURCE clause
         classifies every target row and disables the pruning."""
-        if mode not in ("cow", "mor"):
-            raise ValueError(
-                f"VersionedTable.merge: unknown mode {mode!r} — "
-                "expected 'cow' (copy-on-write rewrite) or 'mor' "
-                "(deletion vector + new-rows-only files)"
-            )
-        mor = mode == "mor"
+        mor = self._check_mode("merge", mode)
         if not on:
             raise ValueError("VersionedTable.merge: 'on' must name key columns")
         # clause CONDITIONS (r13 — completing Delta's clause matrix:
@@ -5987,8 +5919,6 @@ class VersionedTable:
         # files to rewrite: project file identity AT THE SCAN (valid
         # there, unlike post-shuffle input_file_name), then semi-join
         # the source keys
-        from urllib.parse import unquote, urlparse
-
         if fuse_ambiguity:
             # one job returns the touched files AND the ambiguity
             # verdict: a target row matching a key with source
@@ -6026,7 +5956,7 @@ class VersionedTable:
                 .distinct()
                 .collect()
             )
-        touched = {unquote(urlparse(r["__f"]).path) for r in matched_rows}
+        touched = {_file_key(r["__f"]) for r in matched_rows}
         if by_source:
             # a NOT MATCHED BY SOURCE clause also rewrites every file
             # holding an UNMATCHED row the clause fires for: an
@@ -6051,7 +5981,7 @@ class VersionedTable:
                     )
                 )
             touched |= {
-                unquote(urlparse(r["__f"]).path)
+                _file_key(r["__f"])
                 for r in bs_scan.select("__f").distinct().collect()
             }
         touched_files = [f for f in base["files"] if f in touched]
@@ -6131,29 +6061,14 @@ class VersionedTable:
                         F.lit(False),
                     )
 
-                def _bs_upd(name):
-                    t = types[name].simpleString()
-                    return F.expr(
-                        self._strict_cast_sql(
-                            when_not_matched_by_source_update[name],
-                            t,
-                            "VersionedTable.merge: by-source update "
-                            f"of column '{name}' does not fit type "
-                            f"{t} for value '",
-                        )
-                    )
-
-                def _upd(name):
-                    t = types[name].simpleString()
-                    return F.expr(
-                        self._strict_cast_sql(
-                            when_matched_update[name],
-                            t,
-                            "VersionedTable.merge: update of column "
-                            f"'{name}' does not fit type {t} for "
-                            "value '",
-                        )
-                    )
+                _bs_upd = self._strict_caster(
+                    types,
+                    when_not_matched_by_source_update,
+                    "merge: by-source update of",
+                )
+                _upd = self._strict_caster(
+                    types, when_matched_update, "merge: update of"
+                )
 
                 take_update = (
                     is_matched & ~take_delete
@@ -6177,9 +6092,13 @@ class VersionedTable:
                         when_not_matched_by_source_update
                         and f.name in when_not_matched_by_source_update
                     ):
-                        e = F.when(take_bs_update, _bs_upd(f.name)).otherwise(e)
+                        e = F.when(
+                            take_bs_update, F.expr(_bs_upd(f.name))
+                        ).otherwise(e)
                     if when_matched_update and f.name in when_matched_update:
-                        e = F.when(take_update, _upd(f.name)).otherwise(e)
+                        e = F.when(
+                            take_update, F.expr(_upd(f.name))
+                        ).otherwise(e)
                     return e.alias(f.name)
 
                 if mor:
@@ -6216,53 +6135,37 @@ class VersionedTable:
                         for f in schema.fields
                     ]
                     cdc_frames.append(
-                        joined.filter(take_delete | take_bs_delete).select(
-                            *t_cols, F.lit("delete").alias("_change_type")
+                        self._cdc_images(
+                            joined.filter(take_delete | take_bs_delete).select(
+                                *t_cols
+                            )
                         )
                     )
-                    if when_not_matched_by_source_update:
-                        bs_rows = joined.filter(take_bs_update)
-                        cdc_frames.append(
-                            bs_rows.select(
-                                *t_cols,
-                                F.lit("update_preimage").alias("_change_type"),
+                    for take, cast, assigned in (
+                        (
+                            take_bs_update,
+                            _bs_upd,
+                            when_not_matched_by_source_update,
+                        ),
+                        (take_update, _upd, when_matched_update),
+                    ):
+                        if assigned:
+                            taken = joined.filter(take)
+                            cdc_frames.append(
+                                self._cdc_images(
+                                    taken.select(*t_cols),
+                                    taken.select(
+                                        *[
+                                            (
+                                                F.expr(cast(f.name))
+                                                if f.name in assigned
+                                                else F.col(f"t.{f.name}")
+                                            ).alias(f.name)
+                                            for f in schema.fields
+                                        ]
+                                    ),
+                                )
                             )
-                        )
-                        cdc_frames.append(
-                            bs_rows.select(
-                                *[
-                                    (
-                                        _bs_upd(f.name).alias(f.name)
-                                        if f.name
-                                        in when_not_matched_by_source_update
-                                        else F.col(f"t.{f.name}").alias(f.name)
-                                    )
-                                    for f in schema.fields
-                                ],
-                                F.lit("update_postimage").alias("_change_type"),
-                            )
-                        )
-                    if when_matched_update:
-                        upd_rows = joined.filter(take_update)
-                        cdc_frames.append(
-                            upd_rows.select(
-                                *t_cols,
-                                F.lit("update_preimage").alias("_change_type"),
-                            )
-                        )
-                        cdc_frames.append(
-                            upd_rows.select(
-                                *[
-                                    (
-                                        _upd(f.name).alias(f.name)
-                                        if f.name in when_matched_update
-                                        else F.col(f"t.{f.name}").alias(f.name)
-                                    )
-                                    for f in schema.fields
-                                ],
-                                F.lit("update_postimage").alias("_change_type"),
-                            )
-                        )
 
             if when_not_matched_insert is not None:
                 unmatched_src = source.alias("s").join(
@@ -6328,17 +6231,9 @@ class VersionedTable:
                         "be '*', a column->expression dict, or None"
                     )
 
-                def _ins(name):
-                    t = types[name].simpleString()
-                    return F.expr(
-                        self._strict_cast_sql(
-                            ins_exprs[name],
-                            t,
-                            "VersionedTable.merge: insert into column "
-                            f"'{name}' does not fit type {t} for "
-                            "value '",
-                        )
-                    )
+                _ins = self._strict_caster(
+                    types, ins_exprs, "merge: insert into"
+                )
 
                 if gen_cols:
                     # GENERATED columns (r13): dict-form inserts never
@@ -6358,7 +6253,7 @@ class VersionedTable:
                     )
                     first = unmatched_src.select(
                         *[
-                            _ins(f.name).alias(f.name)
+                            F.expr(_ins(f.name)).alias(f.name)
                             for f in schema.fields
                             if f.name not in gen_cols or f.name in supplied
                         ]
@@ -6394,7 +6289,10 @@ class VersionedTable:
                     )
                 else:
                     inserts = unmatched_src.select(
-                        *[_ins(f.name).alias(f.name) for f in schema.fields]
+                        *[
+                            F.expr(_ins(f.name)).alias(f.name)
+                            for f in schema.fields
+                        ]
                     )
                 new_frames.append(inserts)
                 if base.get("cdf"):
@@ -6444,25 +6342,16 @@ class VersionedTable:
                 )
             if not touched_files and not new_files:
                 return parent  # nothing matched, nothing inserted
-            dv_dir = None
-            dv_touched: set = set()
-            if mor and dv_rows is not None:
-                # write FIRST, emptiness-check from the written
-                # footers (r15, same shape as _write_cdc_if_any): the
-                # old limit(1) probe executed the vector plan once and
-                # the write executed it again
-                dv_dir = f"{self.path}/dv/b{v:08d}-{uuid.uuid4().hex[:8]}"
-                apply_light_committer(
-                    dv_rows.write.mode("error"), self.spark
-                ).parquet(dv_dir)
-                if self._dir_has_rows(dv_dir):
-                    # the files this vector names — the rebase guards
-                    # exactly these (file, position) keys, like
-                    # delete(mor); read over the (bounded) written dir
-                    dv_touched = self._dv_files(dv_dir)
-                else:
-                    self._rm_dir(dv_dir)
-                    dv_dir = None
+            # MoR: write the vector FIRST and read its emptiness from
+            # the written footers (r15) — the vector plan runs once
+            dv_dir = (
+                self._write_if_any("dv", dv_rows, v)
+                if dv_rows is not None
+                else None
+            )
+            # the files this vector names — the rebase guards exactly
+            # these (file, position) keys, like delete(mor)
+            dv_touched = self._dv_files(dv_dir) if dv_dir else set()
             if mor and dv_dir is None and not new_files:
                 # every clause hit was already vector-hidden and nothing
                 # inserted: no empty commits (the COW twin's contract)
@@ -6476,9 +6365,9 @@ class VersionedTable:
                     cdc = cdc.unionByName(fr)
                 # a clause set can legitimately change zero rows (e.g. an
                 # insert-only merge whose source keys all matched) —
-                # the footer-count guard in _write_cdc_if_any keeps the
+                # the footer-count guard in _write_if_any keeps the
                 # commit change-free without re-running the CDC plan
-                cdc_dir = self._write_cdc_if_any(cdc, v)
+                cdc_dir = self._write_if_any("cdc", cdc, v)
             if joined_cache is not None:
                 # every joined-derived action (post-images, vector, CDC)
                 # has run — release before the commit loop (battery
@@ -6545,153 +6434,6 @@ class VersionedTable:
             lambda _head: {**extra, "cdc": cdc_dir},
             txn,
             dv_dir=dv_dir,
-        )
-
-    def update(
-        self,
-        predicate: str,
-        assignments: dict[str, str],
-        txn: str | None = None,
-        prune: list[tuple] | None = None,
-        verify_prune: bool = False,
-        mode: str = "cow",
-    ) -> int:
-        """Row-level UPDATE as COPY-ON-WRITE — the DML sibling of
-        :meth:`delete` (Delta UPDATE pattern): for every row where
-        ``predicate`` is TRUE, each ``assignments`` column is replaced
-        by its SQL expression (evaluated against the row's PRE-update
-        values, standard UPDATE semantics); FALSE/NULL rows are kept
-        unchanged. Only files containing matching rows are rewritten —
-        untouched files carry over byte-identical. Every assigned
-        expression is cast to the column's existing type (an UPDATE
-        can never drift the table schema) — STRICTLY: an assignment
-        value the cast cannot represent raises in-plan rather than
-        silently writing NULL into rewritten rows (ADVICE r8; the
-        session pins ANSI off, under which a bare ``.cast`` nulls like
-        ``try_cast``, so the guard is the same in-plan raise
-        ``cast_columns(strict=True)`` uses). Commit is op ``update``;
-        like :meth:`delete` it COMMUTES with concurrent appends and
-        DISJOINT rewrites whose rows provably miss the predicate
-        (r11, file-granularity conflict rules) and raises on any
-        other race. ``read_changes`` refuses ranges
-        crossing it. Returns the new version, or the current version
-        unchanged if no row matched. ``prune``: optional
-        predicate-implied range conjuncts that let manifest metadata
-        narrow the find-scan itself (see :meth:`_touched_files`).
-        ``mode='mor'`` takes the merge-on-read path instead
-        (:meth:`_update_mor`): deletion vector over the pre-images,
-        post-images as new files, zero data files rewritten."""
-        if mode not in ("cow", "mor"):
-            raise ValueError(
-                f"VersionedTable.update: unknown mode {mode!r} — "
-                "expected 'cow' (copy-on-write rewrite) or 'mor' "
-                "(deletion vector + new-rows-only files)"
-            )
-        if mode == "mor":
-            return self._update_mor(
-                predicate, assignments, txn, prune, verify_prune
-            )
-        parent = self.head_version()
-        ptr = self._read_pointer(parent)
-        base = self._resolve(ptr)
-        schema = self._manifest_schema(base)
-        if schema is None:
-            raise ValueError(
-                "VersionedTable.update: legacy manifest without "
-                "schema_json cannot type-check assignments"
-            )
-        types = {f.name: f.dataType for f in schema.fields}
-        unknown = set(assignments) - set(types)
-        if unknown:
-            raise ValueError(
-                f"VersionedTable.update: assignment to unknown "
-                f"column(s) {sorted(unknown)}; table columns are "
-                f"{sorted(types)}"
-            )
-        self._refuse_generated_assignment(base, set(assignments), "update")
-        touched_files = self._touched_files(
-            base, predicate, prune, verify_prune
-        )
-        touched = set(touched_files)
-        if not touched_files:
-            return parent
-        hit = F.coalesce(F.expr(predicate), F.lit(False))
-
-        def _assigned(name):
-            """The assignment expression strict-cast to the column's
-            type: a non-NULL value the cast cannot represent raises
-            in-plan (never a silent NULL — ADVICE r8)."""
-            t = types[name].simpleString()
-            return F.expr(
-                self._strict_cast_sql(
-                    assignments[name],
-                    t,
-                    "VersionedTable.update: assignment to column "
-                    f"'{name}' does not fit type {t} for value '",
-                )
-            )
-
-        rewritten = self._read_files(base, touched_files).select(
-            *[
-                (
-                    F.when(hit, _assigned(f.name))
-                    .otherwise(F.col(f.name))
-                    .alias(f.name)
-                    if f.name in assignments
-                    else F.col(f.name)
-                )
-                for f in schema.fields
-            ]
-        )
-        cdc_dir = None
-        if base.get("cdf"):
-            pre = self._read_files(base, touched_files).filter(hit)
-            post = pre.select(
-                *[
-                    _assigned(f.name).alias(f.name)
-                    if f.name in assignments
-                    else F.col(f.name)
-                    for f in schema.fields
-                ]
-            )
-            # same empty guard as merge/delete: every match may be
-            # DV-hidden (the find-scan over-approximates), and an
-            # empty parquet dir breaks the feed's schema inference.
-            # Write-first (r16): the old limit(1) probe executed the
-            # filtered touched-file scan once and the write executed
-            # pre AND post again; _write_cdc_if_any executes once and
-            # reads emptiness from the written footers.
-            cdc_dir = self._write_cdc_if_any(
-                pre.select(
-                    "*", F.lit("update_preimage").alias("_change_type")
-                ).unionByName(
-                    post.select(
-                        "*",
-                        F.lit("update_postimage").alias("_change_type"),
-                    )
-                ),
-                parent + 1,
-            )
-        new_files = self._write_data(
-            rewritten,
-            parent + 1,
-            base.get("partition_by"),
-            base.get("bucket_by"),
-        )
-        # assignments can push rows outside a CHECK constraint
-        return self._commit(
-            "update",
-            (parent, ptr, base),
-            touched_files,
-            new_files,
-            partial(
-                self._rebase_over_disjoint,
-                "update",
-                touched,
-                self._stale_if_predicate_match(predicate),
-            ),
-            lambda _head: {"predicate": predicate, "cdc": cdc_dir},
-            txn,
         )
 
     def optimize(
@@ -6821,8 +6563,6 @@ class VersionedTable:
         local-FS by construction (register_bucketed refuses remote
         paths), so plain file IO is the right tool here."""
         import os
-        from urllib.parse import urlparse
-
         local = view_path.toUri().getPath()
         try:
             with open(os.path.join(local, "_registered_as")) as fh:

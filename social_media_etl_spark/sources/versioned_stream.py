@@ -161,12 +161,12 @@ def _dv_positions(fs, root: str, table_path: str, dv_dirs, file_path) -> set:
     by ``VersionedTable.delete(mode='mor')`` — column names pinned in
     operators/manifest.py:_DV_FILE/_DV_POS). The vector's file column
     holds the scan-side ``_metadata.file_path`` URI; the manifest
-    records plain paths — compare on the unquoted URI path, the same
-    normalization the batch layer's ``_touched_files`` uses. Bounded
-    by deleted rows, read once per (file, batch)."""
-    from urllib.parse import unquote, urlparse
-
+    records plain paths — compare through the batch layer's
+    ``_file_key``. Bounded by deleted rows, read once per (file,
+    batch)."""
     import pyarrow.dataset as ds
+
+    from social_media_etl_spark.operators.manifest import _file_key
 
     out: set = set()
     for d in dv_dirs:
@@ -177,7 +177,7 @@ def _dv_positions(fs, root: str, table_path: str, dv_dirs, file_path) -> set:
         for v, pos in zip(
             tbl.column(0).to_pylist(), tbl.column(1).to_pylist()
         ):
-            if unquote(urlparse(v).path) == file_path:
+            if _file_key(v) == file_path:
                 out.add(pos)
     return out
 
@@ -389,7 +389,8 @@ def _span_changes(
                 continue
             # the vector names the touched files — bounded metadata
             import pyarrow.dataset as ds
-            from urllib.parse import unquote, urlparse
+
+            from social_media_etl_spark.operators.manifest import _file_key
 
             touched = set()
             for d in new_dvs:
@@ -398,8 +399,7 @@ def _span_changes(
                     format="parquet",
                 ).to_table(columns=["__smetl_dv_file"])
                 touched.update(
-                    unquote(urlparse(u).path)
-                    for u in set(tbl.column(0).to_pylist())
+                    _file_key(u) for u in set(tbl.column(0).to_pylist())
                 )
             live = set(_files_of(fs, root, ptr))
             out.extend(

@@ -1,7 +1,8 @@
 """Model-based property tests over the whole VersionedTable DML
-surface: hypothesis drives RANDOM op sequences (append / COW delete /
-MoR delete / UPDATE / MERGE / upsert / overwrite / OPTIMIZE / column
-RENAME / column DROP / RESTORE to a random earlier version) against
+surface: hypothesis drives RANDOM op sequences (append / delete /
+UPDATE / MERGE, each copy-on-write or merge-on-read / upsert /
+overwrite / OPTIMIZE / column RENAME / column DROP / RESTORE to a
+random earlier version) against
 both the real table and a pure-Python reference model, then asserts
 the head reads equal — the shrunk counterexample is the exact op
 sequence that disagrees. RESTORE's reference semantics is a recorded
@@ -56,9 +57,9 @@ def _df(rows, vname="v", has_extra=True):
 _OP = st.tuples(
     st.sampled_from(
         [
-            "append", "delete_cow", "delete_mor", "update", "merge",
-            "upsert", "overwrite", "optimize", "rename", "drop",
-            "restore",
+            "append", "delete_cow", "delete_mor", "update", "update_mor",
+            "merge", "merge_mor", "upsert", "overwrite", "optimize",
+            "rename", "drop", "restore",
         ]
     ),
     st.integers(min_value=2, max_value=5),
@@ -86,13 +87,13 @@ def _apply_model(model, next_k, op, vname, has_extra):
         for k in [k for k in model if k % m == r]:
             del model[k]
         return next_k, vname, has_extra
-    if kind == "update":
+    if kind in ("update", "update_mor"):
         for k in list(model):
             if k % m == r:
                 v, amt, ex = model[k]
                 model[k] = (v.upper(), amt + 10.0, ex)
         return next_k, vname, has_extra
-    if kind == "merge":
+    if kind in ("merge", "merge_mor"):
         # source: matched ks take s.amt (doubled); one new k inserts;
         # matched ks where amt would exceed 900 delete instead. Even
         # remainders also carry a BY-SOURCE clause: unmatched rows
@@ -157,12 +158,13 @@ def _apply_table(t, next_k, op, vname):
         t.delete(f"k % {m} = {r}")
     elif kind == "delete_mor":
         t.delete(f"k % {m} = {r}", mode="mor")
-    elif kind == "update":
+    elif kind in ("update", "update_mor"):
         t.update(
             f"k % {m} = {r}",
             {vname: f"upper({vname})", "amt": "amt + 10.0"},
+            mode="mor" if kind == "update_mor" else "cow",
         )
-    elif kind == "merge":
+    elif kind in ("merge", "merge_mor"):
         cur = {
             row["k"]: (row[vname], row["amt"], row["extra"] if has_extra else None)
             for row in t.read().collect()
@@ -184,6 +186,7 @@ def _apply_table(t, next_k, op, vname):
             when_not_matched_by_source_delete=(
                 "t.amt > 950.0" if r % 2 == 0 else None
             ),
+            mode="mor" if kind == "merge_mor" else "cow",
         )
     elif kind == "upsert":
         cur = {
@@ -317,7 +320,7 @@ def test_cdf_feed_replay_reconstructs_head(ops):
                 vname = f"{vname}x"
             elif kind in ("append", "overwrite"):
                 next_k += 3
-            elif kind in ("merge", "upsert"):
+            elif kind in ("merge", "merge_mor", "upsert"):
                 next_k += 1
         head_df = t.read()
         cols = head_df.columns

@@ -55,6 +55,11 @@ def test_mor_redelete_same_slice_is_noop(spark, tmp_path):
     v = t.delete("k = 1", mode="mor")
     assert t.delete("k = 1", mode="mor") == v
     assert t.head_version() == v
+    # the no-op's staged (empty) vector was removed: dv/ holds only
+    # the committed one
+    assert sorted(p.name for p in (tmp_path / "t" / "dv").iterdir()) == [
+        d.rsplit("/", 1)[-1] for d in t._read_pointer(v)["delete_vectors"]
+    ]
 
 
 def test_optimize_compacts_vectors_away(spark, tmp_path):

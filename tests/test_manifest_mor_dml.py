@@ -1,5 +1,5 @@
 """MoR UPDATE and MERGE via deletion vectors (VERDICT r11 #3 —
-extending ``_delete_mor``'s machinery so update/merge write DV +
+extending MoR delete's machinery so update/merge write DV +
 new-rows-only files instead of COW-rewriting touched files), plus the
 keyed find-scan pruning (VERDICT r11 #6): a point-keyed MERGE on a
 bloom/stats-indexed key opens O(files-holding-keys)."""
@@ -78,6 +78,9 @@ def test_mor_update_no_match_is_noop(spark, tmp_path):
     )
     assert t.update("k = 99", {"n": "0"}, mode="mor") == 0
     assert t.head_version() == 0
+    # the no-op's staged (empty) vector was removed
+    dv_root = tmp_path / "t" / "dv"
+    assert not dv_root.exists() or not any(dv_root.iterdir())
 
 
 def test_mor_update_strict_cast_raises_in_plan(spark, tmp_path):
