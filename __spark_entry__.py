@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from social_media_etl_spark.catalog import load_table, load_tables
 from social_media_etl_spark.functions import text as TXT
 from social_media_etl_spark.operators import dedup, similarity
+from social_media_etl_spark.operators.manifest import VersionedTable
 from social_media_etl_spark.operators.temporal import asof_join, range_join
 from social_media_etl_spark.plans import analytics, blog
 from social_media_etl_spark.streaming import ingest as streaming_ingest
@@ -84,6 +85,86 @@ def _cleanup_tmpdirs() -> None:
 import atexit as _atexit  # noqa: E402
 
 _atexit.register(_cleanup_tmpdirs)
+
+
+def _new_table(
+    spark: SparkSession, prefix: str, df: DataFrame, **create_kw
+) -> VersionedTable:
+    """A fresh VersionedTable at ``<tmpdir>/t`` created from ``df``; the
+    temp dir is tracked like every ``_tmpdir``."""
+    return VersionedTable.create(spark, f"{_tmpdir(prefix)}/t", df, **create_kw)
+
+
+def _refused(fn: Callable[[], object], exc=ValueError) -> bool:
+    """Whether ``fn()`` raises ``exc`` — a refusal the gated builders
+    require (drift, stale ranges, bad references, duplicate names)."""
+    try:
+        fn()
+    except exc:
+        return True
+    return False
+
+
+# ---------------------------------------------------------------------------
+# In-plan certification: a gated builder returns its result cross-joined
+# with one-row gates, so a broken contract EMPTIES the output and fails
+# the driver's row-count/hash check
+# ---------------------------------------------------------------------------
+
+
+def _gate(df: DataFrame, cond) -> DataFrame:
+    """The one-row ``__gate`` frame: a row while ``cond`` holds over
+    ``df`` (a one-row aggregate), no row otherwise."""
+    return df.filter(cond).select(F.lit(1).alias("__gate"))
+
+
+def _gated(df: DataFrame, *gates: DataFrame) -> DataFrame:
+    """``df`` unchanged while every gate holds its row, EMPTY when any
+    gate is empty; each gate is broadcast and its column dropped."""
+    for gate in gates:
+        df = df.crossJoin(F.broadcast(gate)).drop("__gate")
+    return df
+
+
+def _certified_join(
+    base: DataFrame, rt: DataFrame, cols: list[str], tag: str
+) -> DataFrame:
+    """Roundtrip certification join: every ``base`` row must reappear
+    byte-identical in ``rt`` (null-safe equality on EVERY column; the
+    caller includes a unique key in ``cols`` so the join is 1:1). A
+    dropped, duplicated, or altered row changes the certified row set
+    and fails the downstream count/hash gate. Shared by the formats and
+    Z-order roundtrip queries."""
+    rt = rt.select(*[F.col(c).alias(f"{tag}_{c}") for c in cols])
+    cond = None
+    for c in cols:
+        eq = F.col(c).eqNullSafe(F.col(f"{tag}_{c}"))
+        cond = eq if cond is None else (cond & eq)
+    return base.join(rt, cond, "inner").select(*[F.col(c) for c in cols])
+
+
+def _same_rows_gate(
+    base: DataFrame, rt: DataFrame, cols: list[str], tag: str
+) -> DataFrame:
+    """Snapshot certification as a gate: it holds when every ``base``
+    row reappears in ``rt`` (``_certified_join``) and the certified
+    count equals ``base``'s, so a dropped, duplicated or altered row
+    empties it."""
+    return _gate(
+        _certified_join(base, rt, cols, tag)
+        .agg(F.count(F.lit(1)).alias("__n_cert"))
+        .crossJoin(F.broadcast(base.agg(F.count(F.lit(1)).alias("__n_base")))),
+        F.col("__n_cert") == F.col("__n_base"),
+    )
+
+
+def _group_totals(df: DataFrame, *keys, n: str = "n_events") -> DataFrame:
+    """Per-group row count ``n`` and ``sum_value`` (``value`` summed and
+    rounded to 2dp at the output boundary, as the oracles do)."""
+    return df.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias(n),
+        F.round(F.sum("value"), 2).alias("sum_value"),
+    )
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -290,12 +371,8 @@ def _sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("n_bad"))
     )
-    gate = bad.filter(F.col("n_bad") == 0).select(F.lit(1).alias("__gate"))
-    return (
-        exact.crossJoin(F.broadcast(gate))
-        .drop("__gate")
-        .orderBy("l_returnflag")
-    )
+    gate = _gate(bad, F.col("n_bad") == 0)
+    return _gated(exact, gate).orderBy("l_returnflag")
 
 
 def _anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -973,10 +1050,7 @@ def _streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ev = _stream_events(spark, sf_dir).select("user_id", "value")
     joined = ev.join(cust, "user_id")
-    agg = joined.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum("value"), 2).alias("sum_value"),
-    )
+    agg = _group_totals(joined, "c_mktsegment")
     out = _drain(agg, "stream_static")
     return out.orderBy("c_mktsegment")
 
@@ -1084,23 +1158,6 @@ def _streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _certified_join(
-    base: DataFrame, rt: DataFrame, cols: list[str], tag: str
-) -> DataFrame:
-    """Roundtrip certification join: every ``base`` row must reappear
-    byte-identical in ``rt`` (null-safe equality on EVERY column; the
-    caller includes a unique key in ``cols`` so the join is 1:1). A
-    dropped, duplicated, or altered row changes the certified row set
-    and fails the downstream count/hash gate. Shared by the formats and
-    Z-order roundtrip queries."""
-    rt = rt.select(*[F.col(c).alias(f"{tag}_{c}") for c in cols])
-    cond = None
-    for c in cols:
-        eq = F.col(c).eqNullSafe(F.col(f"{tag}_{c}"))
-        cond = eq if cond is None else (cond & eq)
-    return base.join(rt, cond, "inner").select(*[F.col(c) for c in cols])
-
-
 def _formats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-format certified roundtrip (sources/formats.py): the
     customer slice is written to ORC and CSV, read back through the
@@ -1165,14 +1222,7 @@ def _zorder_layout_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_zordered(base, f"{d}/events_z", ["user_id", "value"], num_files=8)
     rt = spark.read.parquet(f"{d}/events_z")
     certified = _certified_join(base, rt, cols, "z")
-    return (
-        certified.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .orderBy("event_type")
-    )
+    return _group_totals(certified, "event_type").orderBy("event_type")
 
 
 def _compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1204,14 +1254,7 @@ def _compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     certified = _certified_join(base, rt, cols, "c").where(
         F.lit(n_after < n_before)  # the compaction must actually compact
     )
-    return (
-        certified.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .orderBy("event_type")
-    )
+    return _group_totals(certified, "event_type").orderBy("event_type")
 
 
 def _upsert_events_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1249,14 +1292,7 @@ def _upsert_events_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     for batch in (b0, b1, b2):
         upsert_parquet(spark, batch, p, ["event_id"], "seq")
     state = spark.read.parquet(p)
-    return (
-        state.groupBy("event_type", "seq")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .orderBy("event_type", "seq")
-    )
+    return _group_totals(state, "event_type", "seq").orderBy("event_type", "seq")
 
 
 def _dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1424,13 +1460,7 @@ def _approx_gate(
     cond = F.col("n_hit") >= F.lit(min_recall) * F.col("n_exact")
     if require_subset:
         cond = cond & (F.col("n_approx") == F.col("n_hit"))
-    gate = (
-        hit.crossJoin(n_exact)
-        .crossJoin(n_approx)
-        .filter(cond)
-        .select(F.lit(1).alias("__gate"))
-    )
-    return exact.crossJoin(F.broadcast(gate)).drop("__gate")
+    return _gated(exact, _gate(hit.crossJoin(n_exact).crossJoin(n_approx), cond))
 
 
 def _dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2503,19 +2533,15 @@ def _approx_quantiles_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     ok = in_window[0]
     for c in in_window[1:]:
         ok = ok & c
-    gate = (
-        both.agg(F.min(ok.cast("int")).alias("__all_ok"))
-        .filter(F.col("__all_ok") == 1)
-        .select(F.lit(1).alias("__gate"))
+    gate = _gate(
+        both.agg(F.min(ok.cast("int")).alias("__all_ok")), F.col("__all_ok") == 1
     )
     exact = both
     out = exact.select(
         "o_orderpriority",
         *[F.round(f"p{int(p*100)}", 4).alias(f"p{int(p*100)}") for p in probs],
     )
-    return out.crossJoin(F.broadcast(gate)).drop("__gate").orderBy(
-        "o_orderpriority"
-    )
+    return _gated(out, gate).orderBy("o_orderpriority")
 
 
 def _fuzzy_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2681,7 +2707,7 @@ def _cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("n_bad"))
     )
-    gate = bad.filter(F.col("n_bad") == 0).select(F.lit(1).alias("__gate"))
+    gate = _gate(bad, F.col("n_bad") == 0)
     w = Window.orderBy(F.desc("n"), "token")
     return (
         top.withColumn("rank", F.row_number().over(w).cast("long"))
@@ -2824,7 +2850,7 @@ def _streaming_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("n_bad"))
     )
-    gate = bad.filter(F.col("n_bad") == 0).select(F.lit(1).alias("__gate"))
+    gate = _gate(bad, F.col("n_bad") == 0)
     w = Window.orderBy(F.desc("n"), "user_id")
     return (
         top.withColumn("rank", F.row_number().over(w).cast("long"))
@@ -3094,8 +3120,6 @@ def _versioned_table_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     join), and (b) the head being exactly v2. A green row proves
     isolation (later commits never disturb earlier snapshots), the
     merge semantics, and the commit protocol in one query."""
-    from social_media_etl_spark.operators.manifest import VersionedTable
-
     cols = ["event_id", "user_id", "event_type", "value", "ts"]
     events = load_table(spark, sf_dir, "events")
     base = events.filter(F.col("event_id") % 5 == 0).select(*cols)
@@ -3107,30 +3131,35 @@ def _versioned_table_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("ts") + F.expr("INTERVAL 1 HOUR")).alias("ts"),
     )
     app = events.filter(F.col("event_id") % 5 == 1).select(*cols)
-    d = _tmpdir(prefix="smetl_vtab_")
-    t = VersionedTable.create(spark, f"{d}/t", base)
+    t = _new_table(spark, "smetl_vtab_", base)
     t.upsert(upd, ["event_id"], ["ts"])
     v_head = t.append(app)
     # gate (a): v0 is untouched by the two later commits
-    v0_ok = (
-        _certified_join(base, t.read(0), cols, "tt")
-        .agg(F.count(F.lit(1)).alias("__n_cert"))
-        .crossJoin(F.broadcast(base.agg(F.count(F.lit(1)).alias("__n_base"))))
-        .filter(F.col("__n_cert") == F.col("__n_base"))
-        .select(F.lit(1).alias("__gate"))
-    )
-    return (
-        t.read()
-        .where(F.lit(v_head == 2))  # gate (b): exactly three commits
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
+    v0_ok = _same_rows_gate(base, t.read(0), cols, "tt")
+    head = t.read().where(F.lit(v_head == 2))  # gate (b): exactly three commits
+    return _gated(_group_totals(head, "event_type"), v0_ok).orderBy("event_type")
+
+
+def _planted_pairs_gate(docs: DataFrame, sig: DataFrame) -> DataFrame:
+    """The planted (2k, 2k+1) doc pairs of a synthesized-media corpus,
+    gated on the banded-Hamming join over ``sig`` (one 64-bit signature
+    per ``media_id``) finding EVERY pair at Hamming 0 — the shared
+    certification of the image and audio near-dup keys."""
+    found = dedup.simhash_pairs(
+        sig, "media_id", "unused", bits=64, band_bits=8, sig_table=sig
+    ).filter(F.col("hamming") == 0)
+    planted = (
+        docs.filter(F.col("doc_id") % 2 == 0)
+        .select(F.col("doc_id").alias("id_a"))
+        .join(
+            docs.select(F.col("doc_id").alias("id_b")),
+            F.col("id_b") == F.col("id_a") + 1,
         )
-        .crossJoin(F.broadcast(v0_ok))
-        .drop("__gate")
-        .orderBy("event_type")
     )
+    missed = planted.join(found, ["id_a", "id_b"], "left_anti").agg(
+        F.count(F.lit(1)).alias("n_missed")
+    )
+    return _gated(planted, _gate(missed, F.col("n_missed") == 0)).orderBy("id_a")
 
 
 def _image_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3173,26 +3202,7 @@ def _image_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = docs.mapInPandas(_gen, "media_id long, payload binary")
     sig = multimodal.ahash_images(media, id_col="media_id")
-    found = dedup.simhash_pairs(
-        sig, "media_id", "unused", bits=64, band_bits=8, sig_table=sig
-    ).filter(F.col("hamming") == 0)
-    planted = (
-        docs.filter(F.col("doc_id") % 2 == 0)
-        .select(F.col("doc_id").alias("id_a"))
-        .join(
-            docs.select(F.col("doc_id").alias("id_b")),
-            F.col("id_b") == F.col("id_a") + 1,
-        )
-    )
-    missed = planted.join(found, ["id_a", "id_b"], "left_anti").agg(
-        F.count(F.lit(1)).alias("n_missed")
-    )
-    gate = missed.filter(F.col("n_missed") == 0).select(F.lit(1).alias("__gate"))
-    return (
-        planted.crossJoin(F.broadcast(gate))
-        .drop("__gate")
-        .orderBy("id_a")
-    )
+    return _planted_pairs_gate(docs, sig)
 
 
 def _versioned_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3205,29 +3215,18 @@ def _versioned_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     (kept < total) — so a green row certifies both that skipping
     happens AND that it never drops a row (result equals the oracle's
     plain filter)."""
-    from social_media_etl_spark.operators.manifest import VersionedTable
-
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
     clustered = events.repartitionByRange(8, "event_id").sortWithinPartitions(
         "event_id"
     )
-    d = _tmpdir(prefix="smetl_vprune_")
-    t = VersionedTable.create(
-        spark, f"{d}/t", clustered, stats_cols=["event_id"]
-    )
+    t = _new_table(spark, "smetl_vprune_", clustered, stats_cols=["event_id"])
     kept, total = t.pruned_file_count("event_id", lo=100, hi=599)
-    return (
-        t.read_where("event_id", 100, 599)
-        .where(F.lit(kept < total))  # the prune must actually skip
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .orderBy("event_type")
+    pruned = t.read_where("event_id", 100, 599).where(
+        F.lit(kept < total)  # the prune must actually skip
     )
+    return _group_totals(pruned, "event_type").orderBy("event_type")
 
 
 def _audio_fp_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3275,26 +3274,7 @@ def _audio_fp_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = docs.mapInPandas(_gen, "media_id long, payload binary")
     sig = multimodal.audio_fingerprint(media, id_col="media_id")
-    found = dedup.simhash_pairs(
-        sig, "media_id", "unused", bits=64, band_bits=8, sig_table=sig
-    ).filter(F.col("hamming") == 0)
-    planted = (
-        docs.filter(F.col("doc_id") % 2 == 0)
-        .select(F.col("doc_id").alias("id_a"))
-        .join(
-            docs.select(F.col("doc_id").alias("id_b")),
-            F.col("id_b") == F.col("id_a") + 1,
-        )
-    )
-    missed = planted.join(found, ["id_a", "id_b"], "left_anti").agg(
-        F.count(F.lit(1)).alias("n_missed")
-    )
-    gate = missed.filter(F.col("n_missed") == 0).select(F.lit(1).alias("__gate"))
-    return (
-        planted.crossJoin(F.broadcast(gate))
-        .drop("__gate")
-        .orderBy("id_a")
-    )
+    return _planted_pairs_gate(docs, sig)
 
 
 def _embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3350,7 +3330,7 @@ def _embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("n_bad")
     )
-    gate = bad.filter(F.col("n_bad") == 0).select(F.lit(1).alias("__gate"))
+    gate = _gate(bad, F.col("n_bad") == 0)
     err_ratio = F.when(F.col("scale") == 0, F.lit(0.0)).otherwise(
         F.col("max_err") / F.col("scale")
     )
@@ -3379,8 +3359,6 @@ def _versioned_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-identical through the evolution (null-safe certification
     join). A green row certifies merged-footer reads, per-version
     schema identity, and the additive/drift boundary in one query."""
-    from social_media_etl_spark.operators.manifest import VersionedTable
-
     cols = ["event_id", "event_type", "value"]
     events = load_table(spark, sf_dir, "events")
     base = events.filter(F.col("event_id") % 4 == 0).select(*cols)
@@ -3388,15 +3366,14 @@ def _versioned_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         *cols,
         F.concat(F.lit("s"), (F.col("user_id") % 3).cast("string")).alias("src"),
     )
-    d = _tmpdir(prefix="smetl_vevo_")
-    t = VersionedTable.create(spark, f"{d}/t", base)
+    t = _new_table(spark, "smetl_vevo_", base)
     t.append(widened)
     # gate (a): type drift is still rejected after evolution landed.
     # The drifted frame carries ALL evolved columns (src included) so
     # _check_schema gets past the dropped-column branch and the
     # ValueError provably comes from the type-drift check (ADVICE r7).
-    try:
-        t.append(
+    drift_rejected = _refused(
+        lambda: t.append(
             events.limit(5).select(
                 "event_id",
                 "event_type",
@@ -3404,32 +3381,17 @@ def _versioned_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit("s0").alias("src"),
             )
         )
-        drift_rejected = False
-    except ValueError:
-        drift_rejected = True
+    )
     # gate (b): the pre-evolution snapshot keeps its own narrow schema
     v0 = t.read(0)
     v0_schema_ok = [f.name for f in v0.schema.fields] == cols
     # gate (c): v0 rows byte-identical through the evolution
-    v0_cert = (
-        _certified_join(base, v0, cols, "evo")
-        .agg(F.count(F.lit(1)).alias("__n_cert"))
-        .crossJoin(F.broadcast(base.agg(F.count(F.lit(1)).alias("__n_base"))))
-        .filter(F.col("__n_cert") == F.col("__n_base"))
-        .select(F.lit(1).alias("__gate"))
-    )
-    return (
-        t.read()
-        .where(F.lit(drift_rejected and v0_schema_ok))
-        .groupBy("event_type", F.coalesce(F.col("src"), F.lit("none")).alias("src"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .crossJoin(F.broadcast(v0_cert))
-        .drop("__gate")
-        .orderBy("event_type", "src")
-    )
+    v0_cert = _same_rows_gate(base, v0, cols, "evo")
+    head = t.read().where(F.lit(drift_rejected and v0_schema_ok))
+    src = F.coalesce(F.col("src"), F.lit("none")).alias("src")
+    return _gated(
+        _group_totals(head, "event_type", src), v0_cert
+    ).orderBy("event_type", "src")
 
 
 def _versioned_string_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3443,33 +3405,19 @@ def _versioned_string_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame
     filter). This is the most common 100 TB predicate shape
     (type/date dimension filters), which numeric-only stats could
     never serve."""
-    from social_media_etl_spark.operators.manifest import VersionedTable
-
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
     clustered = events.repartitionByRange(
         8, "event_type", "event_id"
     ).sortWithinPartitions("event_type")
-    d = _tmpdir(prefix="smetl_vsprune_")
-    t = VersionedTable.create(
-        spark, f"{d}/t", clustered, stats_cols=["event_type"]
-    )
+    t = _new_table(spark, "smetl_vsprune_", clustered, stats_cols=["event_type"])
     kept, total = t.pruned_file_count("event_type", lo="purchase", hi="purchase")
-    return (
-        t.read_where("event_type", "purchase", "purchase")
-        .where(F.lit(kept < total))  # the prune must actually skip
-        .groupBy(
-            F.coalesce(F.floor(F.col("value") / 100), F.lit(-1))
-            .cast("long")
-            .alias("band")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .orderBy("band")
+    rows = t.read_where("event_type", "purchase", "purchase").where(
+        F.lit(kept < total)  # the prune must actually skip
     )
+    band = F.coalesce(F.floor(F.col("value") / 100), F.lit(-1)).cast("long")
+    return _group_totals(rows, band.alias("band")).orderBy("band")
 
 
 def _versioned_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3484,8 +3432,6 @@ def _versioned_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     retained head must read bit-identically after both vacuums — the
     returned aggregate IS that read, so the driver's hash check
     certifies it against the oracle's replay of the merge + append."""
-    from social_media_etl_spark.operators.manifest import VersionedTable
-
     cols = ["event_id", "user_id", "event_type", "value", "ts"]
     events = load_table(spark, sf_dir, "events")
     base = events.filter(F.col("event_id") % 3 == 0).select(*cols)
@@ -3497,8 +3443,7 @@ def _versioned_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("ts") + F.expr("INTERVAL 1 HOUR")).alias("ts"),
     )
     app = events.filter(F.col("event_id") % 3 == 1).select(*cols)
-    d = _tmpdir(prefix="smetl_vvac_")
-    t = VersionedTable.create(spark, f"{d}/t", base)
+    t = _new_table(spark, "smetl_vvac_", base)
     t.upsert(upd, ["event_id"], ["ts"])
     t.append(app)
     data_dirs_before = {
@@ -3518,16 +3463,7 @@ def _versioned_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         and len(gone) == 1
         and next(iter(gone)).startswith("b00000000")  # it was v0's
     )
-    return (
-        t.read()
-        .where(F.lit(ok))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .orderBy("event_type")
-    )
+    return _group_totals(t.read().where(F.lit(ok)), "event_type").orderBy("event_type")
 
 
 def _versioned_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3543,45 +3479,30 @@ def _versioned_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     chains. The returned aggregate is computed FROM the incremental
     read, so the driver's hash check certifies its content equals the
     oracle's replay of the two appended slices."""
-    from social_media_etl_spark.operators.manifest import VersionedTable
-
     cols = ["event_id", "event_type", "value"]
     events = load_table(spark, sf_dir, "events")
     a = events.filter(F.col("event_id") % 5 == 0).select(*cols)
     b = events.filter(F.col("event_id") % 5 == 1).select(*cols)
     c = events.filter(F.col("event_id") % 5 == 2).select(*cols)
-    d = _tmpdir(prefix="smetl_vcdc_")
-    t = VersionedTable.create(spark, f"{d}/t", a)
+    t = _new_table(spark, "smetl_vcdc_", a)
     t.append(b)
     t.append(c)
     delta_01 = t.read_changes(0, 1)
     delta_12 = t.read_changes(1, 2)
     delta_02 = t.read_changes(0, 2)
-    split_gate = (
+    split_gate = _gate(
         delta_01.agg(F.count(F.lit(1)).alias("__n01"))
         .crossJoin(F.broadcast(delta_12.agg(F.count(F.lit(1)).alias("__n12"))))
-        .crossJoin(F.broadcast(delta_02.agg(F.count(F.lit(1)).alias("__n02"))))
-        .filter(F.col("__n01") + F.col("__n12") == F.col("__n02"))
-        .select(F.lit(1).alias("__gate"))
+        .crossJoin(F.broadcast(delta_02.agg(F.count(F.lit(1)).alias("__n02")))),
+        F.col("__n01") + F.col("__n12") == F.col("__n02"),
     )
     # gate (b): a rewrite inside the range must be refused
     t.upsert(a.limit(10), ["event_id"], ["value"])
-    try:
-        t.read_changes(0)
-        rewrite_refused = False
-    except ValueError:
-        rewrite_refused = True
-    return (
-        delta_02.where(F.lit(rewrite_refused))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .crossJoin(F.broadcast(split_gate))
-        .drop("__gate")
-        .orderBy("event_type")
-    )
+    rewrite_refused = _refused(lambda: t.read_changes(0))
+    return _gated(
+        _group_totals(delta_02.where(F.lit(rewrite_refused)), "event_type"),
+        split_gate,
+    ).orderBy("event_type")
 
 
 def _versioned_overwrite_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3596,8 +3517,6 @@ def _versioned_overwrite_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     read_changes over the overwrite REFUSING (rewrites have no
     added-rows semantics). The returned head aggregate is certified
     against the oracle's replay of the refresh."""
-    from social_media_etl_spark.operators.manifest import VersionedTable
-
     cols = ["event_id", "event_type", "value"]
     events = load_table(spark, sf_dir, "events")
     base = events.filter(F.col("event_id") % 2 == 0).select(*cols)
@@ -3606,33 +3525,12 @@ def _versioned_overwrite_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         (F.col("value") * 2).alias("value"),
     )
-    d = _tmpdir(prefix="smetl_vow_")
-    t = VersionedTable.create(spark, f"{d}/t", base)
+    t = _new_table(spark, "smetl_vow_", base)
     v_head = t.overwrite(refreshed)
-    try:
-        t.read_changes(0)
-        rewrite_refused = False
-    except ValueError:
-        rewrite_refused = True
-    v0_cert = (
-        _certified_join(base, t.read(0), cols, "ow")
-        .agg(F.count(F.lit(1)).alias("__n_cert"))
-        .crossJoin(F.broadcast(base.agg(F.count(F.lit(1)).alias("__n_base"))))
-        .filter(F.col("__n_cert") == F.col("__n_base"))
-        .select(F.lit(1).alias("__gate"))
-    )
-    return (
-        t.read()
-        .where(F.lit(v_head == 1 and rewrite_refused))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .crossJoin(F.broadcast(v0_cert))
-        .drop("__gate")
-        .orderBy("event_type")
-    )
+    rewrite_refused = _refused(lambda: t.read_changes(0))
+    v0_cert = _same_rows_gate(base, t.read(0), cols, "ow")
+    head = t.read().where(F.lit(v_head == 1 and rewrite_refused))
+    return _gated(_group_totals(head, "event_type"), v0_cert).orderBy("event_type")
 
 
 def _versioned_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3649,18 +3547,13 @@ def _versioned_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     AFTER the delete (null-safe certification join). The returned head
     aggregate is certified against the oracle's plain anti-filter —
     TRUE rows gone, FALSE/NULL rows kept."""
-    from social_media_etl_spark.operators.manifest import VersionedTable
-
     cols = ["event_id", "event_type", "value"]
     events = load_table(spark, sf_dir, "events")
     base = events.filter(F.col("event_id") % 3 == 2).select(*cols)
     clustered = base.repartitionByRange(8, "event_id").sortWithinPartitions(
         "event_id"
     )
-    d = _tmpdir(prefix="smetl_vdel_")
-    t = VersionedTable.create(
-        spark, f"{d}/t", clustered, stats_cols=["event_id"]
-    )
+    t = _new_table(spark, "smetl_vdel_", clustered, stats_cols=["event_id"])
     v0_files = set(t._read_manifest(0)["files"])
     # prune hint = the predicate's own range: manifest stats narrow the
     # find-files scan itself before any footer opens
@@ -3670,25 +3563,10 @@ def _versioned_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     m1 = t._read_manifest(v_head)
     reused = set(m1["files"]) & v0_files
     ok = v_head == 1 and bool(reused) and set(m1["files"]) != v0_files
-    v0_cert = (
-        _certified_join(base, t.read(0), cols, "del")
-        .agg(F.count(F.lit(1)).alias("__n_cert"))
-        .crossJoin(F.broadcast(base.agg(F.count(F.lit(1)).alias("__n_base"))))
-        .filter(F.col("__n_cert") == F.col("__n_base"))
-        .select(F.lit(1).alias("__gate"))
-    )
-    return (
-        t.read()
-        .where(F.lit(ok))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .crossJoin(F.broadcast(v0_cert))
-        .drop("__gate")
-        .orderBy("event_type")
-    )
+    v0_cert = _same_rows_gate(base, t.read(0), cols, "del")
+    return _gated(
+        _group_totals(t.read().where(F.lit(ok)), "event_type"), v0_cert
+    ).orderBy("event_type")
 
 
 def _versioned_cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3706,8 +3584,6 @@ def _versioned_cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (null-safe certification join). The returned sink aggregate is
     certified against the oracle's replay of the three slices —
     exactly-once, end to end."""
-    from social_media_etl_spark.operators.manifest import VersionedTable
-
     cols = ["event_id", "event_type", "value"]
     events = load_table(spark, sf_dir, "events")
     a = events.filter(F.col("event_id") % 6 == 0).select(*cols)
@@ -3731,31 +3607,17 @@ def _versioned_cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         and dst.head_version() == head_before
     )
     src_head = src.read()
-    drained_cert = (
+    drained_cert = _gate(
         _certified_join(src_head, dst.read(), cols, "cdc")
         .agg(F.count(F.lit(1)).alias("__n_cert"))
-        .crossJoin(
-            F.broadcast(src_head.agg(F.count(F.lit(1)).alias("__n_src")))
-        )
-        .crossJoin(F.broadcast(dst.read().agg(F.count(F.lit(1)).alias("__n_dst"))))
-        .filter(
-            (F.col("__n_cert") == F.col("__n_src"))
-            & (F.col("__n_cert") == F.col("__n_dst"))
-        )
-        .select(F.lit(1).alias("__gate"))
+        .crossJoin(F.broadcast(src_head.agg(F.count(F.lit(1)).alias("__n_src"))))
+        .crossJoin(F.broadcast(dst.read().agg(F.count(F.lit(1)).alias("__n_dst")))),
+        (F.col("__n_cert") == F.col("__n_src"))
+        & (F.col("__n_cert") == F.col("__n_dst")),
     )
-    return (
-        dst.read()
-        .where(F.lit(ok))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .crossJoin(F.broadcast(drained_cert))
-        .drop("__gate")
-        .orderBy("event_type")
-    )
+    return _gated(
+        _group_totals(dst.read().where(F.lit(ok)), "event_type"), drained_cert
+    ).orderBy("event_type")
 
 
 def _versioned_partitioned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3771,18 +3633,15 @@ def _versioned_partitioned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     the date-partitioned + id-clustered layout every 100 TB warehouse
     runs. The result is certified against the oracle's plain filter,
     so pruning provably never drops a row."""
-    from social_media_etl_spark.operators.manifest import VersionedTable
-
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
     clustered = events.repartitionByRange(4, "event_id").sortWithinPartitions(
         "event_id"
     )
-    d = _tmpdir(prefix="smetl_vpart_")
-    t = VersionedTable.create(
+    t = _new_table(
         spark,
-        f"{d}/t",
+        "smetl_vpart_",
         clustered,
         partition_by="event_type",
         stats_cols=["event_id"],
@@ -3794,22 +3653,11 @@ def _versioned_partitioned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         [("event_type", "purchase", "purchase"), ("event_id", 100, 599)]
     )
     ok = part_kept < total and comb_kept < part_kept
-    return (
-        t.read_where_all(
-            [("event_type", "purchase", "purchase"), ("event_id", 100, 599)]
-        )
-        .where(F.lit(ok))
-        .groupBy(
-            F.coalesce(F.floor(F.col("value") / 100), F.lit(-1))
-            .cast("long")
-            .alias("band")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .orderBy("band")
-    )
+    rows = t.read_where_all(
+        [("event_type", "purchase", "purchase"), ("event_id", 100, 599)]
+    ).where(F.lit(ok))
+    band = F.coalesce(F.floor(F.col("value") / 100), F.lit(-1)).cast("long")
+    return _group_totals(rows, band.alias("band")).orderBy("band")
 
 
 def _versioned_multipart_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3828,8 +3676,6 @@ def _versioned_multipart_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     tuple pruning provably never drops a row (NULL user_ids land as
     NULL tuple positions and are kept by the metadata, dropped only by
     the exact filter — both engines agree)."""
-    from social_media_etl_spark.operators.manifest import VersionedTable
-
     events = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
@@ -3839,10 +3685,9 @@ def _versioned_multipart_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     clustered = events.repartitionByRange(4, "event_id").sortWithinPartitions(
         "event_id"
     )
-    d = _tmpdir(prefix="smetl_vmpart_")
-    t = VersionedTable.create(
+    t = _new_table(
         spark,
-        f"{d}/t",
+        "smetl_vmpart_",
         clustered,
         partition_by=["event_type", "uband"],
         stats_cols=["event_id"],
@@ -3861,20 +3706,11 @@ def _versioned_multipart_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         and k_ab < min(k_a, k_b)
         and k_stats <= k_ab
     )
-    return (
-        t.read_where_all(preds_a + preds_b + [("event_id", 100, 899)])
-        .where(F.lit(ok))
-        .groupBy(
-            F.coalesce(F.floor(F.col("value") / 100), F.lit(-1))
-            .cast("long")
-            .alias("band")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .orderBy("band")
+    rows = t.read_where_all(preds_a + preds_b + [("event_id", 100, 899)]).where(
+        F.lit(ok)
     )
+    band = F.coalesce(F.floor(F.col("value") / 100), F.lit(-1)).cast("long")
+    return _group_totals(rows, band.alias("band")).orderBy("band")
 
 
 def _versioned_column_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3894,17 +3730,12 @@ def _versioned_column_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     the renames. The returned aggregate reads the head under the NEW
     names and is certified against the oracle's plain filter on the
     ORIGINAL names — the mapping provably changes nothing but names."""
-    from social_media_etl_spark.operators.manifest import VersionedTable
-
     cols = ["event_id", "event_type", "value"]
     events = load_table(spark, sf_dir, "events").select(*cols)
     clustered = events.repartitionByRange(8, "event_id").sortWithinPartitions(
         "event_id"
     )
-    d = _tmpdir(prefix="smetl_vrename_")
-    t = VersionedTable.create(
-        spark, f"{d}/t", clustered, stats_cols=["event_id"]
-    )
+    t = _new_table(spark, "smetl_vrename_", clustered, stats_cols=["event_id"])
     v0_files = t._read_manifest(0)["files"]
     t.rename_column("event_id", "eid")
     t.rename_column("value", "amount")
@@ -3919,27 +3750,17 @@ def _versioned_column_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
         and [f.name for f in t.read().schema.fields]
         == ["eid", "event_type", "amount"]
     )
-    v0_cert = (
-        _certified_join(clustered, t.read(0), cols, "ren")
-        .agg(F.count(F.lit(1)).alias("__n_cert"))
-        .crossJoin(
-            F.broadcast(clustered.agg(F.count(F.lit(1)).alias("__n_base")))
-        )
-        .filter(F.col("__n_cert") == F.col("__n_base"))
-        .select(F.lit(1).alias("__gate"))
-    )
-    return (
+    v0_cert = _same_rows_gate(clustered, t.read(0), cols, "ren")
+    return _gated(
         t.read_where("eid", 100, 599)
         .where(F.lit(ok))
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("amount"), 2).alias("sum_amount"),
-        )
-        .crossJoin(F.broadcast(v0_cert))
-        .drop("__gate")
-        .orderBy("event_type")
-    )
+        ),
+        v0_cert,
+    ).orderBy("event_type")
 
 
 def _versioned_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3960,8 +3781,6 @@ def _versioned_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads the registered tables and is certified against the oracle's
     plain join. The layout is a stored artifact, built once per
     (session, sf_dir) and amortized, as a warehouse would."""
-    from social_media_etl_spark.operators.manifest import VersionedTable
-
     built = getattr(spark, "_smetl_vbkt_for", None)
     want = (spark.sparkContext.applicationId, sf_dir)
     if built is None or built.get("key") != want:
@@ -4057,36 +3876,24 @@ def _versioned_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (_change_type, event_type) is certified against the oracle's
     relational replay of the same slices — inserts = the two appended
     slices, deletes = the predicate rows present at delete time."""
-    from social_media_etl_spark.operators.manifest import VersionedTable
-
     cols = ["event_id", "event_type", "value"]
     events = load_table(spark, sf_dir, "events").select(*cols)
     sl = [
         events.filter(F.pmod(F.col("event_id"), F.lit(3)) == i) for i in (0, 1, 2)
     ]
-    d = _tmpdir(prefix="smetl_vcdf_")
-    t = VersionedTable.create(spark, f"{d}/t", sl[0])
+    t = _new_table(spark, "smetl_vcdf_", sl[0])
     t.append(sl[1])
     t.delete("event_id BETWEEN 100 AND 599", mode="mor")
     t.append(sl[2])
     feed = t.read_change_feed(0)
     ok = t.head_version() == 3
-    gate = (
-        feed.agg(F.countDistinct("_commit_version").alias("__n"))
-        .filter(F.col("__n") == 3)
-        .select(F.lit(1).alias("__gate"))
+    gate = _gate(
+        feed.agg(F.countDistinct("_commit_version").alias("__n")), F.col("__n") == 3
     )
-    return (
-        feed.where(F.lit(ok))
-        .groupBy("_change_type", "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .crossJoin(F.broadcast(gate))
-        .drop("__gate")
-        .orderBy("_change_type", "event_type")
-    )
+    return _gated(
+        _group_totals(feed.where(F.lit(ok)), "_change_type", "event_type", n="n_rows"),
+        gate,
+    ).orderBy("_change_type", "event_type")
 
 
 def _streaming_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4105,7 +3912,6 @@ def _streaming_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     being exactly v3 and (b) the drained feed covering exactly the 3
     post-base commits. The aggregate by (_change_type, event_type) is
     certified against the oracle's relational replay of the slices."""
-    from social_media_etl_spark.operators.manifest import VersionedTable
     from social_media_etl_spark.sources.versioned_stream import (
         register_versioned_cdc_source,
     )
@@ -4117,8 +3923,7 @@ def _streaming_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.filter(F.pmod(F.col("event_id"), F.lit(5)) == i).select(*cols)
         for i in (0, 1, 2)
     ]
-    d = _tmpdir(prefix="smetl_scf_")
-    t = VersionedTable.create(spark, f"{d}/t", sl[0])
+    t = _new_table(spark, "smetl_scf_", sl[0])
     t.append(sl[1])
     t.delete("event_id BETWEEN 100 AND 599", mode="mor")
     t.append(sl[2])
@@ -4131,22 +3936,13 @@ def _streaming_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = _drain(stream, "stream_cdf", mode="append")
     ok = t.head_version() == 3
-    gate = (
-        out.agg(F.countDistinct("_commit_version").alias("__n"))
-        .filter(F.col("__n") == 3)
-        .select(F.lit(1).alias("__gate"))
+    gate = _gate(
+        out.agg(F.countDistinct("_commit_version").alias("__n")), F.col("__n") == 3
     )
-    return (
-        out.where(F.lit(ok))
-        .groupBy("_change_type", "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .crossJoin(F.broadcast(gate))
-        .drop("__gate")
-        .orderBy("_change_type", "event_type")
-    )
+    return _gated(
+        _group_totals(out.where(F.lit(ok)), "_change_type", "event_type", n="n_rows"),
+        gate,
+    ).orderBy("_change_type", "event_type")
 
 
 def _versioned_column_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4167,8 +3963,6 @@ def _versioned_column_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate reads the head under the surviving names and is
     certified against the oracle's plain filter over the full events
     table — a drop provably changes visibility, never values."""
-    from social_media_etl_spark.operators.manifest import VersionedTable
-
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
@@ -4178,10 +3972,7 @@ def _versioned_column_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     clustered = base.repartitionByRange(8, "event_id").sortWithinPartitions(
         "event_id"
     )
-    d = _tmpdir(prefix="smetl_vdrop_")
-    t = VersionedTable.create(
-        spark, f"{d}/t", clustered, stats_cols=["event_id"]
-    )
+    t = _new_table(spark, "smetl_vdrop_", clustered, stats_cols=["event_id"])
     v0_files = t._read_manifest(0)["files"]
     t.rename_column("event_id", "eid")  # v1: the surviving rename
     t.drop_column("scratch")  # v2: metadata-only drop
@@ -4203,27 +3994,11 @@ def _versioned_column_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         == ["eid", "event_type", "value"]
     )
     cols0 = ["event_id", "event_type", "value", "scratch"]
-    v0_cert = (
-        _certified_join(clustered, t.read(0), cols0, "drp")
-        .agg(F.count(F.lit(1)).alias("__n_cert"))
-        .crossJoin(
-            F.broadcast(clustered.agg(F.count(F.lit(1)).alias("__n_base")))
-        )
-        .filter(F.col("__n_cert") == F.col("__n_base"))
-        .select(F.lit(1).alias("__gate"))
-    )
-    return (
-        t.read_where("eid", 100, 599)
-        .where(F.lit(ok))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .crossJoin(F.broadcast(v0_cert))
-        .drop("__gate")
-        .orderBy("event_type")
-    )
+    v0_cert = _same_rows_gate(clustered, t.read(0), cols0, "drp")
+    return _gated(
+        _group_totals(t.read_where("eid", 100, 599).where(F.lit(ok)), "event_type"),
+        v0_cert,
+    ).orderBy("event_type")
 
 
 def _versioned_upsert_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4241,17 +4016,11 @@ def _versioned_upsert_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame
     and the feed carrying exactly one commit version. The aggregate
     by (_change_type, event_type) is certified against the oracle's
     relational replay of the same classification."""
-    from social_media_etl_spark.operators.manifest import VersionedTable
-
     cols = ["event_id", "event_type", "value"]
     events = load_table(spark, sf_dir, "events").select(*cols)
     base = events.filter(F.pmod(F.col("event_id"), F.lit(3)) == 0)
-    d = _tmpdir(prefix="smetl_vucdf_")
-    t = VersionedTable.create(
-        spark,
-        f"{d}/t",
-        base.withColumn("ord", F.lit(0)),
-        change_data_feed=True,
+    t = _new_table(
+        spark, "smetl_vucdf_", base.withColumn("ord", F.lit(0)), change_data_feed=True
     )
     src = (
         base.filter(F.col("event_id").between(100, 599))
@@ -4271,22 +4040,13 @@ def _versioned_upsert_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame
     t.upsert(src, ["event_id"], ["ord"])
     feed = t.read_change_feed(0)
     ok = t.head_version() == 1
-    gate = (
-        feed.agg(F.countDistinct("_commit_version").alias("__n"))
-        .filter(F.col("__n") == 1)
-        .select(F.lit(1).alias("__gate"))
+    gate = _gate(
+        feed.agg(F.countDistinct("_commit_version").alias("__n")), F.col("__n") == 1
     )
-    return (
-        feed.where(F.lit(ok))
-        .groupBy("_change_type", "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .crossJoin(F.broadcast(gate))
-        .drop("__gate")
-        .orderBy("_change_type", "event_type")
-    )
+    return _gated(
+        _group_totals(feed.where(F.lit(ok)), "_change_type", "event_type", n="n_rows"),
+        gate,
+    ).orderBy("_change_type", "event_type")
 
 
 def _streaming_upsert_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4300,7 +4060,6 @@ def _streaming_upsert_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame
     executors). Gated in-plan on head == v1 and the DRAINED feed
     carrying exactly one commit version. Certified against the
     oracle's relational replay of the classification."""
-    from social_media_etl_spark.operators.manifest import VersionedTable
     from social_media_etl_spark.sources.versioned_stream import (
         register_versioned_cdc_source,
     )
@@ -4309,12 +4068,8 @@ def _streaming_upsert_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame
     cols = ["event_id", "event_type", "value"]
     events = load_table(spark, sf_dir, "events").select(*cols)
     base = events.filter(F.pmod(F.col("event_id"), F.lit(5)) == 0)
-    d = _tmpdir(prefix="smetl_sucdf_")
-    t = VersionedTable.create(
-        spark,
-        f"{d}/t",
-        base.withColumn("ord", F.lit(0)),
-        change_data_feed=True,
+    t = _new_table(
+        spark, "smetl_sucdf_", base.withColumn("ord", F.lit(0)), change_data_feed=True
     )
     src = (
         base.filter(F.col("event_id").between(100, 599))
@@ -4341,22 +4096,13 @@ def _streaming_upsert_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     out = _drain(stream, "stream_upsert_cdf", mode="append")
     ok = t.head_version() == 1
-    gate = (
-        out.agg(F.countDistinct("_commit_version").alias("__n"))
-        .filter(F.col("__n") == 1)
-        .select(F.lit(1).alias("__gate"))
+    gate = _gate(
+        out.agg(F.countDistinct("_commit_version").alias("__n")), F.col("__n") == 1
     )
-    return (
-        out.where(F.lit(ok))
-        .groupBy("_change_type", "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .crossJoin(F.broadcast(gate))
-        .drop("__gate")
-        .orderBy("_change_type", "event_type")
-    )
+    return _gated(
+        _group_totals(out.where(F.lit(ok)), "_change_type", "event_type", n="n_rows"),
+        gate,
+    ).orderBy("_change_type", "event_type")
 
 
 def _versioned_overwrite_change_feed(
@@ -4374,36 +4120,24 @@ def _versioned_overwrite_change_feed(
     feed carrying exactly one commit version. The aggregate by
     (_change_type, event_type) is certified against the oracle's
     relational replay: deletes = the old slice, inserts = the new."""
-    from social_media_etl_spark.operators.manifest import VersionedTable
-
     cols = ["event_id", "event_type", "value"]
     events = load_table(spark, sf_dir, "events").select(*cols)
-    d = _tmpdir(prefix="smetl_vocdf_")
-    t = VersionedTable.create(
+    t = _new_table(
         spark,
-        f"{d}/t",
+        "smetl_vocdf_",
         events.filter(F.pmod(F.col("event_id"), F.lit(4)) == 0),
         change_data_feed=True,
     )
     t.overwrite(events.filter(F.pmod(F.col("event_id"), F.lit(4)) == 1))
     feed = t.read_change_feed(0)
     ok = t.head_version() == 1
-    gate = (
-        feed.agg(F.countDistinct("_commit_version").alias("__n"))
-        .filter(F.col("__n") == 1)
-        .select(F.lit(1).alias("__gate"))
+    gate = _gate(
+        feed.agg(F.countDistinct("_commit_version").alias("__n")), F.col("__n") == 1
     )
-    return (
-        feed.where(F.lit(ok))
-        .groupBy("_change_type", "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .crossJoin(F.broadcast(gate))
-        .drop("__gate")
-        .orderBy("_change_type", "event_type")
-    )
+    return _gated(
+        _group_totals(feed.where(F.lit(ok)), "_change_type", "event_type", n="n_rows"),
+        gate,
+    ).orderBy("_change_type", "event_type")
 
 
 def _versioned_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4425,19 +4159,14 @@ def _versioned_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     The returned head aggregate is certified against the oracle's
     plain scan of both slices — the restore provably un-did the
     delete."""
-    from social_media_etl_spark.operators.manifest import VersionedTable
-
     cols = ["event_id", "event_type", "value"]
     events = load_table(spark, sf_dir, "events").select(*cols)
     part_a = events.filter(F.pmod(F.col("event_id"), F.lit(6)) == 2)
     part_b = events.filter(F.pmod(F.col("event_id"), F.lit(6)) == 5)
-    d = _tmpdir(prefix="smetl_vrst_")
     # no stats/clustering: this key certifies restore METADATA
     # semantics, not pruning (versioned_delete_where covers that);
     # fewer files = fewer footer ops in the 4-commit chain
-    t = VersionedTable.create(
-        spark, f"{d}/t", part_a.repartition(2), change_data_feed=True
-    )
+    t = _new_table(spark, "smetl_vrst_", part_a.repartition(2), change_data_feed=True)
     t.append(part_b.repartition(1))
     t.delete("event_id BETWEEN 100 AND 599")
     v = t.restore(1)
@@ -4474,25 +4203,15 @@ def _versioned_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    replay = (
+    replay = _gate(
         tagged.groupBy("event_id")
         .agg(F.sum("__w").alias("__s"))
-        .agg(F.max(F.abs(F.col("__s"))).alias("__m"))
-        .filter(F.col("__m") == 0)
-        .select(F.lit(1).alias("__gate"))
+        .agg(F.max(F.abs(F.col("__s"))).alias("__m")),
+        F.col("__m") == 0,
     )
-    return (
-        t.read()
-        .where(F.lit(ok))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .crossJoin(F.broadcast(replay))
-        .drop("__gate")
-        .orderBy("event_type")
-    )
+    return _gated(
+        _group_totals(t.read().where(F.lit(ok)), "event_type"), replay
+    ).orderBy("event_type")
 
 
 def _versioned_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4513,8 +4232,6 @@ def _versioned_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     files through the copied segment stats. The returned clone
     aggregate is certified against the oracle's anti-filtered scan of
     the two slices."""
-    from social_media_etl_spark.operators.manifest import VersionedTable
-
     cols = ["event_id", "event_type", "value"]
     events = load_table(spark, sf_dir, "events").select(*cols)
     part_a = events.filter(F.pmod(F.col("event_id"), F.lit(6)) == 1)
@@ -4561,16 +4278,7 @@ def _versioned_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
         == 0
         and kept < total
     )
-    return (
-        c.read()
-        .where(F.lit(ok))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .orderBy("event_type")
-    )
+    return _group_totals(c.read().where(F.lit(ok)), "event_type").orderBy("event_type")
 
 
 def _versioned_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4589,15 +4297,12 @@ def _versioned_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     false-positive, never false-negative). The returned union of four
     point lookups is certified against the oracle's plain IN-list
     filter."""
-    from social_media_etl_spark.operators.manifest import VersionedTable
-
     cols = ["event_id", "event_type", "value"]
     events = load_table(spark, sf_dir, "events").select(*cols)
     base = events.filter(F.pmod(F.col("event_id"), F.lit(3)) == 0)
-    d = _tmpdir(prefix="smetl_vblm_")
-    t = VersionedTable.create(
+    t = _new_table(
         spark,
-        f"{d}/t",
+        "smetl_vblm_",
         base.repartition(8),  # hash layout: ids span every file
         bloom_cols=["event_id"],
         bloom_bits=262144,  # sized for sf0.1's ~4k distinct ids/file
@@ -4632,8 +4337,6 @@ def _versioned_null_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually skipping files. The returned two-row census (each scan's
     row count and exact id sum) is certified against the oracle's
     relational replay of the same NULLing rule."""
-    from social_media_etl_spark.operators.manifest import VersionedTable
-
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
@@ -4644,13 +4347,10 @@ def _versioned_null_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("value"))
         .alias("value"),
     )
-    d = _tmpdir(prefix="smetl_vnull_")
-    t = VersionedTable.create(
+    t = _new_table(
         spark,
-        f"{d}/t",
-        base.repartitionByRange(6, "event_type").sortWithinPartitions(
-            "event_type"
-        ),
+        "smetl_vnull_",
+        base.repartitionByRange(6, "event_type").sortWithinPartitions("event_type"),
         stats_cols=["value"],
     )
     t.append(  # all-NULL file: the IS NOT NULL scan must skip it
@@ -4706,8 +4406,6 @@ def _versioned_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the oracle's relational replay of the same casts — Spark's
     parquet float→double promotion and DuckDB's REAL→DOUBLE cast must
     agree bit-for-bit."""
-    from social_media_etl_spark.operators.manifest import VersionedTable
-
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
@@ -4716,13 +4414,10 @@ def _versioned_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.col("value").cast("float").alias("value"),
     )
-    d = _tmpdir(prefix="smetl_vwide_")
-    t = VersionedTable.create(
+    t = _new_table(
         spark,
-        f"{d}/t",
-        base.repartitionByRange(6, "event_id").sortWithinPartitions(
-            "event_id"
-        ),
+        "smetl_vwide_",
+        base.repartitionByRange(6, "event_id").sortWithinPartitions("event_id"),
         stats_cols=["event_id"],
     )
     v0_files = t._read_manifest(0)["files"]
@@ -4774,8 +4469,6 @@ def _versioned_merge_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one atomic commit) and on the by-source clause refusing 's.'
     references. The aggregate by event_type is certified against the
     oracle's relational replay of the sync."""
-    from social_media_etl_spark.operators.manifest import VersionedTable
-
     cols = ["event_id", "event_type", "value"]
     events = load_table(spark, sf_dir, "events").select(*cols)
     base = events.filter(F.pmod(F.col("event_id"), F.lit(4)) == 2)
@@ -4786,17 +4479,14 @@ def _versioned_merge_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             events.filter(F.pmod(F.col("event_id"), F.lit(8)) == 3)
         )
     )
-    d = _tmpdir(prefix="smetl_vmbs_")
-    t = VersionedTable.create(spark, f"{d}/t", base)
-    refused = False
-    try:
-        t.merge(
+    t = _new_table(spark, "smetl_vmbs_", base)
+    refused = _refused(  # by-source clauses must reject source refs
+        lambda: t.merge(
             src,
             on=["event_id"],
             when_not_matched_by_source_delete="s.value > 0",
         )
-    except ValueError:
-        refused = True  # by-source clauses must reject source refs
+    )
     v = t.merge(
         src,
         on=["event_id"],
@@ -4805,16 +4495,9 @@ def _versioned_merge_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         when_not_matched_by_source_delete="true",
     )
     ok = refused and v == 1 and t.head_version() == 1
-    return (
-        t.read()
-        .where(F.lit(ok))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .orderBy("event_type")
-    )
+    return _group_totals(
+        t.read().where(F.lit(ok)), "event_type", n="n_rows"
+    ).orderBy("event_type")
 
 
 def _versioned_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4834,18 +4517,13 @@ def _versioned_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     pointer) with the row count unchanged. The returned head aggregate
     is certified against the oracle's plain anti-filter — TRUE rows
     gone, FALSE/NULL rows kept — read through the compacted layout."""
-    from social_media_etl_spark.operators.manifest import VersionedTable
-
     cols = ["event_id", "event_type", "value"]
     events = load_table(spark, sf_dir, "events")
     base = events.filter(F.col("event_id") % 9 == 4).select(*cols)
     clustered = base.repartitionByRange(8, "event_id").sortWithinPartitions(
         "event_id"
     )
-    d = _tmpdir(prefix="smetl_vmor_")
-    t = VersionedTable.create(
-        spark, f"{d}/t", clustered, stats_cols=["event_id"]
-    )
+    t = _new_table(spark, "smetl_vmor_", clustered, stats_cols=["event_id"])
     v0_files = set(t._read_manifest(0)["files"])
     v_head = t.delete(
         "event_id BETWEEN 300 AND 799",
@@ -4865,25 +4543,10 @@ def _versioned_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         and dv_compacted
         and t.read(v_opt).count() == n_before_opt
     )
-    v0_cert = (
-        _certified_join(base, t.read(0), cols, "mor")
-        .agg(F.count(F.lit(1)).alias("__n_cert"))
-        .crossJoin(F.broadcast(base.agg(F.count(F.lit(1)).alias("__n_base"))))
-        .filter(F.col("__n_cert") == F.col("__n_base"))
-        .select(F.lit(1).alias("__gate"))
-    )
-    return (
-        t.read()
-        .where(F.lit(ok))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .crossJoin(F.broadcast(v0_cert))
-        .drop("__gate")
-        .orderBy("event_type")
-    )
+    v0_cert = _same_rows_gate(base, t.read(0), cols, "mor")
+    return _gated(
+        _group_totals(t.read().where(F.lit(ok)), "event_type"), v0_cert
+    ).orderBy("event_type")
 
 
 def _versioned_mor_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4909,18 +4572,15 @@ def _versioned_mor_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the compacted pointer) with the row count unchanged. The head
     aggregate is certified against the oracle's relational replay:
     update ∪ anti-delete ∪ literal inserts."""
-    from social_media_etl_spark.operators.manifest import VersionedTable
-
     cols = ["event_id", "event_type", "value"]
     events = load_table(spark, sf_dir, "events")
     base = events.filter(F.col("event_id") % 10 == 3).select(*cols)
     clustered = base.repartitionByRange(8, "event_id").sortWithinPartitions(
         "event_id"
     )
-    d = _tmpdir(prefix="smetl_vmmg_")
-    t = VersionedTable.create(
+    t = _new_table(
         spark,
-        f"{d}/t",
+        "smetl_vmmg_",
         clustered,
         stats_cols=["event_id"],
         bloom_cols=["event_id"],
@@ -4971,25 +4631,10 @@ def _versioned_mor_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         and dv_compacted
         and t.read(v_opt).count() == n_before_opt
     )
-    v0_cert = (
-        _certified_join(base, t.read(0), cols, "mmg")
-        .agg(F.count(F.lit(1)).alias("__n_cert"))
-        .crossJoin(F.broadcast(base.agg(F.count(F.lit(1)).alias("__n_base"))))
-        .filter(F.col("__n_cert") == F.col("__n_base"))
-        .select(F.lit(1).alias("__gate"))
-    )
-    return (
-        t.read()
-        .where(F.lit(ok))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .crossJoin(F.broadcast(v0_cert))
-        .drop("__gate")
-        .orderBy("event_type")
-    )
+    v0_cert = _same_rows_gate(base, t.read(0), cols, "mmg")
+    return _gated(
+        _group_totals(t.read().where(F.lit(ok)), "event_type"), v0_cert
+    ).orderBy("event_type")
 
 
 def _sql_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5007,14 +4652,12 @@ def _sql_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     a hash match certifies the snapshot SQL reads exactly the pinned
     version, not the current table."""
     from social_media_etl_spark.operators import timetravel as tt
-    from social_media_etl_spark.operators.manifest import VersionedTable
 
     cols = ["event_id", "event_type", "value"]
     events = load_table(spark, sf_dir, "events")
     a = events.filter(F.col("event_id") % 13 == 0).select(*cols)
     b = events.filter(F.col("event_id") % 13 == 1).select(*cols)
-    d = _tmpdir(prefix="smetl_vsql_")
-    t = VersionedTable.create(spark, f"{d}/t", a)
+    t = _new_table(spark, "smetl_vsql_", a)
     t.append(b)
     tt.register_table(spark, "tt_sql_travel", t.path)
     hist = {r["version"]: r["commit_ts_ms"] for r in t.history().collect()}
@@ -5066,16 +4709,13 @@ def _versioned_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     update ∪ insert then anti-delete. First-committer-wins is pinned
     by test_manifest_merge.py (a raced merge raises rather than
     half-applying)."""
-    from social_media_etl_spark.operators.manifest import VersionedTable
-
     cols = ["event_id", "event_type", "value"]
     events = load_table(spark, sf_dir, "events")
     base = events.filter(F.col("event_id") % 11 == 0).select(*cols)
     clustered = base.repartitionByRange(8, "event_id").sortWithinPartitions(
         "event_id"
     )
-    d = _tmpdir(prefix="smetl_vmrg_")
-    t = VersionedTable.create(spark, f"{d}/t", clustered)
+    t = _new_table(spark, "smetl_vmrg_", clustered)
     v0_files = set(t._read_manifest(0)["files"])
     # batch 1: matched update (value doubled for event_id <= 999) +
     # not-matched insert (the disjoint %11=5 slice)
@@ -5109,25 +4749,10 @@ def _versioned_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     ok = v1 == 1 and v2 == 2 and cow_reused and replayed and (
         t.head_version() == 2
     )
-    v0_cert = (
-        _certified_join(base, t.read(0), cols, "mrg")
-        .agg(F.count(F.lit(1)).alias("__n_cert"))
-        .crossJoin(F.broadcast(base.agg(F.count(F.lit(1)).alias("__n_base"))))
-        .filter(F.col("__n_cert") == F.col("__n_base"))
-        .select(F.lit(1).alias("__gate"))
-    )
-    return (
-        t.read()
-        .where(F.lit(ok))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .crossJoin(F.broadcast(v0_cert))
-        .drop("__gate")
-        .orderBy("event_type")
-    )
+    v0_cert = _same_rows_gate(base, t.read(0), cols, "mrg")
+    return _gated(
+        _group_totals(t.read().where(F.lit(ok)), "event_type"), v0_cert
+    ).orderBy("event_type")
 
 
 def _sql_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5156,18 +4781,14 @@ def _sql_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     and insert keys exist at every testdata SF (sf0.001 ids stop at
     999; inserts use fresh 7-digit keys)."""
     from social_media_etl_spark.operators import timetravel as tt
-    from social_media_etl_spark.operators.manifest import VersionedTable
 
     cols = ["event_id", "event_type", "value"]
     events = load_table(spark, sf_dir, "events")
     base = events.filter(F.col("event_id") % 9 == 2).select(*cols)
-    d = _tmpdir(prefix="smetl_sqlmrg_")
-    t = VersionedTable.create(
+    t = _new_table(
         spark,
-        f"{d}/t",
-        base.repartitionByRange(6, "event_id").sortWithinPartitions(
-            "event_id"
-        ),
+        "smetl_sqlmrg_",
+        base.repartitionByRange(6, "event_id").sortWithinPartitions("event_id"),
     )
     tt.register_table(spark, "sqldml_merge_t", t.path)
     base.filter(F.col("event_id") <= 311).withColumn(
@@ -5218,16 +4839,7 @@ def _sql_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
         and pre_fold["s"] == post_fold["s"]
         and t.head_version() == 2
     )
-    return (
-        t.read()
-        .where(F.lit(ok))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .orderBy("event_type")
-    )
+    return _group_totals(t.read().where(F.lit(ok)), "event_type").orderBy("event_type")
 
 
 def _sql_update_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5245,14 +4857,12 @@ def _sql_update_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     update then anti-filter of the delete. Predicate constants
     (id ≤ 449, delete range 600-899) exist at every testdata SF."""
     from social_media_etl_spark.operators import timetravel as tt
-    from social_media_etl_spark.operators.manifest import VersionedTable
 
     cols = ["event_id", "event_type", "value"]
     events = load_table(spark, sf_dir, "events")
     base = events.filter(F.col("event_id") % 9 == 4).select(*cols)
     n_base = base.count()
-    d = _tmpdir(prefix="smetl_sqlupd_")
-    t = VersionedTable.create(spark, f"{d}/t", base)
+    t = _new_table(spark, "smetl_sqlupd_", base)
     tt.register_table(spark, "sqldml_ud_t", t.path)
     r1 = tt.sql(
         spark,
@@ -5319,7 +4929,6 @@ def _sql_copy_into_generated(spark: SparkSession, sf_dir: str) -> DataFrame:
     generated column's values are oracle-checked, not just gated.
     Slices (%9=5 seed, %9=7 copied) exist at every testdata SF."""
     from social_media_etl_spark.operators import timetravel as tt
-    from social_media_etl_spark.operators.manifest import VersionedTable
 
     cols = ["event_id", "event_type", "value"]
     events = load_table(spark, sf_dir, "events")
@@ -5363,16 +4972,7 @@ def _sql_copy_into_generated(spark: SparkSession, sf_dir: str) -> DataFrame:
         and [t._read_pointer(v)["op"] for v in (0, 1, 2)]
         == ["create", "set_properties", "append"]
     )
-    return (
-        t.read()
-        .where(F.lit(ok))
-        .groupBy("value_band")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .orderBy("value_band")
-    )
+    return _group_totals(t.read().where(F.lit(ok)), "value_band").orderBy("value_band")
 
 
 def _sql_create_table_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5405,7 +5005,6 @@ def _sql_create_table_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid as _uuid
 
     from social_media_etl_spark.operators import timetravel as tt
-    from social_media_etl_spark.operators.manifest import VersionedTable
 
     events = load_table(spark, sf_dir, "events")
     d = _tmpdir(prefix="smetl_sqlct_")
@@ -5438,15 +5037,13 @@ def _sql_create_table_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"INSERT INTO {name} VALUES "
         "(1000057, 'ctins', 125.0), (1000061, 'ctins', 20.0)",
     ).collect()
-    dup_refused = False
-    try:
-        tt.sql(
+    dup_refused = _refused(
+        lambda: tt.sql(
             spark,
             f"CREATE TABLE {name} (x INT) USING versioned "
             f"LOCATION '{d}/dup'",
         )
-    except ValueError:
-        dup_refused = True
+    )
     ok = (
         r1[0]["op"] == "create"
         and empty_after_create
@@ -5460,16 +5057,9 @@ def _sql_create_table_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         and [t._read_pointer(v)["op"] for v in range(t.head_version() + 1)]
         == ["create", "set_properties", "append", "append"]
     )
-    return (
-        t.read()
-        .where(F.lit(ok))
-        .groupBy("event_type", "band")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .orderBy("event_type", "band")
-    )
+    return _group_totals(
+        t.read().where(F.lit(ok)), "event_type", "band"
+    ).orderBy("event_type", "band")
 
 
 def _sql_insert_alter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5490,15 +5080,13 @@ def _sql_insert_alter(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the whole DDL chain. The %9={1,8} slices and 7-digit
     literal keys exist at every testdata SF."""
     from social_media_etl_spark.operators import timetravel as tt
-    from social_media_etl_spark.operators.manifest import VersionedTable
 
     events = load_table(spark, sf_dir, "events")
-    d = _tmpdir(prefix="smetl_sqlia_")
     junk = spark.createDataFrame(
         [(1, "junk", 1.0, 1), (2, "junk", 2.0, 2)],
         "event_id long, event_type string, value double, small int",
     )
-    t = VersionedTable.create(spark, f"{d}/t", junk)
+    t = _new_table(spark, "smetl_sqlia_", junk)
     tt.register_table(spark, "sqlia_t", t.path)
     for tag, mod in (("a", 1), ("b", 8)):
         events.filter(F.col("event_id") % 9 == mod).select(
@@ -5604,7 +5192,6 @@ def _sql_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid as _uuid
 
     from social_media_etl_spark.operators import timetravel as tt
-    from social_media_etl_spark.operators.manifest import VersionedTable
 
     events = load_table(spark, sf_dir, "events")
     d = _tmpdir(prefix="smetl_sqlpe_")
@@ -5635,11 +5222,9 @@ def _sql_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     show = tt.sql(spark, f"SHOW CREATE TABLE {name}").collect()[0][
         "createtab_stmt"
     ]
-    unknown_refused = False
-    try:
-        tt.sql(spark, f"ALTER TABLE {name} SET PARTITIONED BY (zzz)")
-    except ValueError:
-        unknown_refused = True
+    unknown_refused = _refused(
+        lambda: tt.sql(spark, f"ALTER TABLE {name} SET PARTITIONED BY (zzz)")
+    )
     ok = (
         r1[0]["op"] == "create"
         and r2[0]["op"] == "set_partition_spec"
@@ -5653,16 +5238,7 @@ def _sql_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         and [t._read_pointer(v)["op"] for v in range(t.head_version() + 1)]
         == ["create", "set_partition_spec", "append"]
     )
-    return (
-        t.read()
-        .where(F.lit(ok))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .orderBy("event_type")
-    )
+    return _group_totals(t.read().where(F.lit(ok)), "event_type").orderBy("event_type")
 
 
 def _sql_deep_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5692,7 +5268,6 @@ def _sql_deep_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid as _uuid
 
     from social_media_etl_spark.operators import timetravel as tt
-    from social_media_etl_spark.operators.manifest import VersionedTable
 
     events = load_table(spark, sf_dir, "events")
     d = _tmpdir(prefix="smetl_sqldc_")
@@ -5743,16 +5318,7 @@ def _sql_deep_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
         and diverged
         and survived
     )
-    return (
-        c.read()
-        .where(F.lit(ok))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .orderBy("event_type")
-    )
+    return _group_totals(c.read().where(F.lit(ok)), "event_type").orderBy("event_type")
 
 
 def _sql_identity_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5779,7 +5345,6 @@ def _sql_identity_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid as _uuid
 
     from social_media_etl_spark.operators import timetravel as tt
-    from social_media_etl_spark.operators.manifest import VersionedTable
 
     events = load_table(spark, sf_dir, "events")
     d = _tmpdir(prefix="smetl_sqlid_")
@@ -5821,15 +5386,13 @@ def _sql_identity_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     conforming = head.filter(
         (F.col("row_id") >= 1000) & ((F.col("row_id") - 1000) % 3 == 0)
     ).count()
-    refused = False
-    try:
-        tt.sql(
+    refused = _refused(
+        lambda: tt.sql(
             spark,
             f"INSERT INTO {name} (row_id, event_id, event_type, value) "
             "VALUES (1, 1, 'x', 0.0)",
         )
-    except ValueError:
-        refused = True
+    )
     show = tt.sql(spark, f"SHOW CREATE TABLE {name}").collect()[0][
         "createtab_stmt"
     ]
@@ -5846,15 +5409,7 @@ def _sql_identity_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
         in show
         and wm2 == max_id
     )
-    return (
-        head.where(F.lit(ok))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .orderBy("event_type")
-    )
+    return _group_totals(head.where(F.lit(ok)), "event_type").orderBy("event_type")
 
 
 def _sql_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5883,7 +5438,6 @@ def _sql_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid as _uuid
 
     from social_media_etl_spark.operators import timetravel as tt
-    from social_media_etl_spark.operators.manifest import VersionedTable
 
     events = load_table(spark, sf_dir, "events")
     d = _tmpdir(prefix="smetl_sqlrw_")
@@ -5922,15 +5476,13 @@ def _sql_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts0 = t._read_manifest(0)["parts"]
     nonp_v0 = {f for f in files0 if parts0.get(f) != "purchase"}
     granular = nonp_v0 == carried
-    refused = False
-    try:
-        tt.sql(
+    refused = _refused(
+        lambda: tt.sql(
             spark,
             f"INSERT INTO {name} REPLACE WHERE event_type = 'purchase'"
             " VALUES (1, 'click', 1.0)",
         )
-    except ValueError:
-        refused = True
+    )
     tt_ok = (
         t.read(0).filter(F.col("event_type") == "purchase").count()
         == n_purchases_v0
@@ -5943,16 +5495,7 @@ def _sql_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
         and refused
         and tt_ok
     )
-    return (
-        t.read()
-        .where(F.lit(ok))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .orderBy("event_type")
-    )
+    return _group_totals(t.read().where(F.lit(ok)), "event_type").orderBy("event_type")
 
 
 def _versioned_manifest_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5971,15 +5514,12 @@ def _versioned_manifest_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     resolved file count. The returned head aggregate is certified
     against the oracle's union of the three slices, so the segmented
     read path provably loses and invents nothing."""
-    from social_media_etl_spark.operators.manifest import VersionedTable
-
     cols = ["event_id", "event_type", "value"]
     events = load_table(spark, sf_dir, "events")
     a = events.filter(F.col("event_id") % 7 == 0).select(*cols)
     b = events.filter(F.col("event_id") % 7 == 1).select(*cols)
     c = events.filter(F.col("event_id") % 7 == 2).select(*cols)
-    d = _tmpdir(prefix="smetl_vseg_")
-    t = VersionedTable.create(spark, f"{d}/t", a.repartition(6))
+    t = _new_table(spark, "smetl_vseg_", a.repartition(6))
     ptr0 = t._read_pointer(0)
     v1 = t.append(b.repartition(2))
     ptr1 = t._read_pointer(v1)
@@ -6002,16 +5542,7 @@ def _versioned_manifest_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (d) the pointer's running count matches the resolved set
         and ptr2["n_files"] == len(resolved["files"])
     )
-    return (
-        t.read()
-        .where(F.lit(ok))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .orderBy("event_type")
-    )
+    return _group_totals(t.read().where(F.lit(ok)), "event_type").orderBy("event_type")
 
 
 def _multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6094,15 +5625,13 @@ def _multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     bad = decoded.filter(F.col("max_err") > 2).agg(
         F.count(F.lit(1)).alias("n_bad")
     )
-    gate = bad.filter(F.col("n_bad") == 0).select(F.lit(1).alias("__gate"))
-    return (
+    gate = _gate(bad, F.col("n_bad") == 0)
+    return _gated(
         decoded.select(
             F.col("media_id").alias("doc_id"), "width", "height", "channels"
-        )
-        .crossJoin(F.broadcast(gate))
-        .drop("__gate")
-        .orderBy("doc_id")
-    )
+        ),
+        gate,
+    ).orderBy("doc_id")
 
 
 def _managed(fn: Callable[[SparkSession, str], DataFrame]):

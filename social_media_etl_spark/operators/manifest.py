@@ -151,6 +151,44 @@ class UnsupportedTableFeatureError(RuntimeError):
     an unknown flag would return wrong rows, not degraded ones."""
 
 
+#: Driver fast-path bound (r15/r16): a commit's footer-stats pass, a
+#: deep clone's file copy and an identity watermark run on the driver
+#: for at most this many files — and, for stats and copy, this many
+#: total bytes (bloom columns read real column data, not just
+#: footers). Larger sets keep their distributed Spark stage.
+_DRIVER_MAX_FILES = 64
+_DRIVER_MAX_BYTES = 256 * 1024 * 1024
+
+
+def _fits_driver(paths: list[str]) -> bool:
+    """Whether ``paths`` is a small LOCAL file set the driver handles
+    itself: every path scheme-less, at most ``_DRIVER_MAX_FILES`` of
+    them, totalling at most ``_DRIVER_MAX_BYTES``. A size that can't
+    be read (``OSError``) means not small."""
+    if any("://" in p for p in paths) or len(paths) > _DRIVER_MAX_FILES:
+        return False
+    try:
+        return sum(os.path.getsize(p) for p in paths) <= _DRIVER_MAX_BYTES
+    except OSError:
+        return False
+
+
+def _file_stat(manifest: dict, f: str, col: str):
+    """File ``f``'s recorded stats entry for ``col`` — ``[lo, hi,
+    bloom, nulls, rows]``, shorter for older entries — or None. A
+    renamed column's pre-rename files recorded stats under the OLD
+    physical name, so the lookup falls through the alias chain (r9
+    #4): data skipping keeps working across the rename."""
+    fstats = (manifest.get("stats") or {}).get(f, {})
+    s = fstats.get(col)
+    if s is None:
+        for a in (manifest.get("aliases") or {}).get(col, ()):
+            s = fstats.get(a)
+            if s is not None:
+                break
+    return s
+
+
 def _file_key(uri: str) -> str:
     """The plain path the manifest records for a scan-side file URI
     (``input_file_name()``, a vector's ``_metadata.file_path``):
@@ -750,9 +788,7 @@ class VersionedTable:
         bound) falls back to the aggregate — byte-identical result."""
         if not files or not allocated:
             return {}
-        if len(files) <= int(
-            self.spark.conf.get("spark.smetl.stats.driverMaxFiles", "64")
-        ):
+        if len(files) <= _DRIVER_MAX_FILES:
             marks = self._footer_identity_marks(files, id_map, allocated)
             if marks is not None:
                 return marks
@@ -1265,14 +1301,13 @@ class VersionedTable:
         while the footer reads themselves are ~1 ms/file) — and the
         result was ALWAYS collected to the driver as bounded metadata
         anyway, so driver memory is unchanged. At or below
-        ``spark.smetl.stats.driverMaxFiles`` files (default 64) and
-        ``spark.smetl.stats.driverMaxBytes`` total bytes (default
-        256 MB — bloom columns read real column data, not just
-        footers) on a LOCAL table, the same per-file code
-        (:func:`_stats_rows_for_files`) runs directly on the driver —
-        byte-identical output, zero Spark jobs. Large commits (the
-        100 TB shape: thousands of files per commit) keep the
-        distributed executor pass unchanged.
+        ``_DRIVER_MAX_FILES`` files (64) and ``_DRIVER_MAX_BYTES``
+        total bytes (256 MB — bloom columns read real column data, not
+        just footers) on a LOCAL table (:func:`_fits_driver`), the same
+        per-file code (:func:`_stats_rows_for_files`) runs directly on
+        the driver — byte-identical output, zero Spark jobs. Large
+        commits (the 100 TB shape: thousands of files per commit) keep
+        the distributed executor pass unchanged.
         """
         bloom_cols = (bloom or {}).get("cols") or []
         bloom_bits = int((bloom or {}).get("bits") or 2048)
@@ -1288,28 +1323,16 @@ class VersionedTable:
         absent_null = set(absent_as_null or [])
 
         rows_iter = None
-        if self._local and len(files) <= int(
-            self.spark.conf.get("spark.smetl.stats.driverMaxFiles", "64")
-        ):
-            try:
-                total = sum(os.path.getsize(f) for f in files)
-            except OSError:
-                total = None
-            if total is not None and total <= int(
-                self.spark.conf.get(
-                    "spark.smetl.stats.driverMaxBytes",
-                    str(256 * 1024 * 1024),
-                )
-            ):
-                cols_out = _stats_rows_for_files(
-                    files, stats_cols, bloom_cols,
-                    bloom_bits, bloom_k, absent_null,
-                )
-                names = list(cols_out)
-                rows_iter = (
-                    dict(zip(names, vals))
-                    for vals in zip(*(cols_out[n] for n in names))
-                )
+        if self._local and _fits_driver(files):
+            cols_out = _stats_rows_for_files(
+                files, stats_cols, bloom_cols,
+                bloom_bits, bloom_k, absent_null,
+            )
+            names = list(cols_out)
+            rows_iter = (
+                dict(zip(names, vals))
+                for vals in zip(*(cols_out[n] for n in names))
+            )
 
         if rows_iter is None:
 
@@ -1477,16 +1500,7 @@ class VersionedTable:
                 pv, lo, hi, pt_is_string
             ):
                 return False
-        fstats = (manifest.get("stats") or {}).get(f, {})
-        s = fstats.get(col)
-        if s is None:
-            # a renamed column's pre-rename files recorded stats under
-            # the OLD physical name — fall through the alias chain so
-            # data skipping keeps working across the rename (r9 #4)
-            for a in (manifest.get("aliases") or {}).get(col, ()):
-                s = fstats.get(a)
-                if s is not None:
-                    break
+        s = _file_stat(manifest, f, col)
         if s is not None:
             try:
                 if (hi is not None and s[0] > hi) or (
@@ -1513,24 +1527,49 @@ class VersionedTable:
         recorded metadata (pruning may never drop data). The single
         skip predicate read_where* and pruned_file_count* report
         from."""
-        pt_str: dict = {}
         # string-domain lookup for EVERY predicate column: historical
         # specs (set_partition_spec) may record values for columns
         # outside the current spec, and those files still prune
-        pred_cols = {c for c, _, _ in preds}
-        schema = cls._manifest_schema(manifest)
-        if schema is not None:
-            for x in schema.fields:
-                if x.name in pred_cols:
-                    pt_str[x.name] = isinstance(x.dataType, T.StringType)
+        pt_str = cls._string_cols(manifest, {c for c, _, _ in preds})
         return [
             f
             for f in manifest["files"]
             if all(
                 cls._file_overlaps(
-                    manifest, f, c, lo, hi, pt_str.get(c, False), use_bloom
+                    manifest, f, c, lo, hi, c in pt_str, use_bloom
                 )
                 for c, lo, hi in preds
+            )
+        ]
+
+    @classmethod
+    def _string_cols(cls, manifest: dict, cols: set[str]) -> set[str]:
+        """The ``cols`` the manifest schema types as STRING — the domain
+        their recorded partition values compare in (:meth:`_pv_excludes`);
+        a legacy schema-less manifest has none."""
+        schema = cls._manifest_schema(manifest)
+        if schema is None:
+            return set()
+        return {
+            x.name
+            for x in schema.fields
+            if x.name in cols and isinstance(x.dataType, T.StringType)
+        }
+
+    @classmethod
+    def _files_holding_any(
+        cls, manifest: dict, files: list[str], col: str, vals: list
+    ) -> list[str]:
+        """The ``files`` that may hold a row whose ``col`` equals ANY of
+        ``vals`` — per-value range/partition/bloom skipping
+        (:meth:`_file_overlaps`), unioned."""
+        pt_str = col in cls._string_cols(manifest, {col})
+        return [
+            f
+            for f in files
+            if any(
+                cls._file_overlaps(manifest, f, col, v, v, pt_str)
+                for v in vals
             )
         ]
 
@@ -1558,13 +1597,7 @@ class VersionedTable:
             )
             if alias is None:
                 return True
-        fstats = (manifest.get("stats") or {}).get(f, {})
-        s = fstats.get(col)
-        if s is None:
-            for a in (manifest.get("aliases") or {}).get(col, ()):
-                s = fstats.get(a)
-                if s is not None:
-                    break
+        s = _file_stat(manifest, f, col)
         if s is None or len(s) < 3 or not s[2]:
             return True
         idxs = _bloom_hashes(value, int(cfg["bits"]), int(cfg["k"]))
@@ -1620,13 +1653,7 @@ class VersionedTable:
         ``f`` — None when unrecorded (legacy entry, footer without the
         counts, alias miss). Falls through the rename alias chain like
         every other stats consumer."""
-        fstats = (manifest.get("stats") or {}).get(f, {})
-        s = fstats.get(col)
-        if s is None:
-            for a in (manifest.get("aliases") or {}).get(col, ()):
-                s = fstats.get(a)
-                if s is not None:
-                    break
+        s = _file_stat(manifest, f, col)
         if s is None or len(s) < 5 or s[3] is None or s[4] is None:
             return None
         return int(s[3]), int(s[4])
@@ -1679,20 +1706,7 @@ class VersionedTable:
             raise ValueError("read_where_in: no non-NULL values")
         v = self.head_version() if version is None else version
         m = self._read_manifest(v)
-        schema = self._manifest_schema(m)
-        pt_str = False
-        if schema is not None:
-            for x in schema.fields:
-                if x.name == col:
-                    pt_str = isinstance(x.dataType, T.StringType)
-        kept = [
-            f
-            for f in m["files"]
-            if any(
-                self._file_overlaps(m, f, col, val, val, pt_str)
-                for val in vals
-            )
-        ]
+        kept = self._files_holding_any(m, m["files"], col, vals)
         return self._read_files(m, kept).filter(F.col(col).isin(vals))
 
     # bounded driver-side key collect for merge/upsert find-scan
@@ -1741,20 +1755,7 @@ class VersionedTable:
             # NULL keys match nothing under MERGE's plain equality —
             # zero files can hold a match
             return []
-        schema = self._manifest_schema(base)
-        pt_str = False
-        if schema is not None:
-            for x in schema.fields:
-                if x.name == col:
-                    pt_str = isinstance(x.dataType, T.StringType)
-        return [
-            f
-            for f in files
-            if any(
-                self._file_overlaps(base, f, col, v, v, pt_str)
-                for v in vals
-            )
-        ]
+        return self._files_holding_any(base, files, col, vals)
 
     def merge_scan_file_count(
         self, source: DataFrame, on: list[str], version: int | None = None
@@ -3835,36 +3836,24 @@ class VersionedTable:
         driver never touches file contents; parallelism is one task
         per partition over the pair list.
 
-        DRIVER FAST PATH (r15 optimization): below
-        ``spark.smetl.copy.driverMaxFiles`` all-local pairs (default
-        64) totalling under ``spark.smetl.copy.driverMaxBytes``
-        (default 256 MB) the copies run as plain driver file IO —
+        DRIVER FAST PATH (r15 optimization): at or below
+        ``_DRIVER_MAX_FILES`` all-local pairs (64) totalling at most
+        ``_DRIVER_MAX_BYTES`` (256 MB, :func:`_fits_driver`) the
+        copies run as plain driver file IO —
         the Spark job costs ~0.3-0.5 s of pure scheduling while a
         small local copy is milliseconds. Large or remote clones (the
         100 TB shape) keep the distributed stage."""
         if not pairs:
             return 0
-        if all(
-            "://" not in s and "://" not in d for s, d in pairs
-        ) and len(pairs) <= int(
-            self.spark.conf.get("spark.smetl.copy.driverMaxFiles", "64")
+        if all("://" not in d for _, d in pairs) and _fits_driver(
+            [s for s, _ in pairs]
         ):
             import shutil
 
-            try:
-                total = sum(os.path.getsize(s) for s, _ in pairs)
-            except OSError:
-                total = None
-            if total is not None and total <= int(
-                self.spark.conf.get(
-                    "spark.smetl.copy.driverMaxBytes",
-                    str(256 * 1024 * 1024),
-                )
-            ):
-                for s, d in pairs:
-                    os.makedirs(os.path.dirname(d), exist_ok=True)
-                    shutil.copyfile(s, d)
-                return len(pairs)
+            for s, d in pairs:
+                os.makedirs(os.path.dirname(d), exist_ok=True)
+                shutil.copyfile(s, d)
+            return len(pairs)
         import pandas as pd  # noqa: F401 - executor-side dependency
 
         def _copy(batches):

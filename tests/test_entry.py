@@ -280,6 +280,39 @@ def test_formats_roundtrip_certified_equals_direct(spark, sf_dir):
     assert len(got) > 0
 
 
+def test_same_rows_gate_passes_only_an_identical_snapshot(spark):
+    """``_gated(result, _same_rows_gate(base, rt, cols, tag))`` — the
+    snapshot certification the gated builders share — returns
+    ``result`` unchanged when ``rt`` holds exactly ``base``'s rows,
+    NULL cells included, and zero rows when ``rt`` drops one row,
+    duplicates one, or alters one cell."""
+    schema = "id long, name string, value double"
+    cols = ["id", "name", "value"]
+    rows = [(1, "a", 1.5), (2, None, 2.5), (3, "c", None)]
+    base = spark.createDataFrame(rows, schema)
+    result = spark.createDataFrame([("x", 7), ("y", None)], "k string, n long")
+
+    def gated(rt_rows):
+        rt = spark.createDataFrame(rt_rows, schema)
+        out = entrymod._gated(
+            result, entrymod._same_rows_gate(base, rt, cols, "rt")
+        )
+        assert out.columns == result.columns
+        return sorted(out.collect(), key=str)
+
+    want = sorted(result.collect(), key=str)
+    assert gated(rows) == want
+    assert gated(rows[::-1]) == want
+    for broken in (
+        rows[:2],  # a row dropped
+        rows + [rows[1]],  # a row duplicated
+        [(1, "a", 1.5), (2, "b", 2.5), (3, "c", None)],  # NULL name set
+        [(1, "a", 1.5), (2, None, 2.5), (3, "c", 3.5)],  # NULL value set
+        [(1, "a", 9.5), (2, None, 2.5), (3, "c", None)],  # a value altered
+    ):
+        assert gated(broken) == [], broken
+
+
 def test_rocksdb_graded_twin_restores_session_confs(spark, sf_dir):
     """streaming_stateful_totals_rocksdb scopes the RocksDB provider
     conf to its own drain: afterwards the session conf is back to
